@@ -753,10 +753,11 @@ object Bench {
     final case class StreamRes(name: String, totalSec: Double,
                                batchMs: Seq[Long], survivors: Long)
     // SPARK_GRAFT_BENCH_STREAM=0 skips the pass — for quick subset A/Bs
-    // only (full/official runs keep the default ON; the artifact then
-    // simply carries no `stream` block, same as a stream-pass failure)
-    val streamResults: Seq[StreamRes] = if (
-      sys.env.get("SPARK_GRAFT_BENCH_STREAM").contains("0")) Seq.empty
+    // only (full/official runs keep the default ON). A skipped pass writes
+    // `"stream_skipped":true` into the artifact; a failed one writes no
+    // `stream` block and logs the failure.
+    val streamSkipped = sys.env.get("SPARK_GRAFT_BENCH_STREAM").contains("0")
+    val streamResults: Seq[StreamRes] = if (streamSkipped) Seq.empty
     else try {
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       implicit val sqlCtx = spark.sqlContext
@@ -889,7 +890,8 @@ object Bench {
     def flatRatio(ms: Seq[Long]): Double =
       if (ms.length < 3) 1.0
       else math.round(ms.last.toDouble / math.max(ms(1), 1) * 100) / 100.0
-    val streamJson = if (streamResults.isEmpty) "" else
+    val skippedJson = if (streamSkipped) ""","stream_skipped":true""" else ""
+    val streamJson = if (streamResults.isEmpty) skippedJson else
       s""","stream":${jmap(streamResults.map(r => r.name ->
         (s"""{"total_sec":${r.totalSec},"batches_ms":${r.batchMs
           .mkString("[", ",", "]")},"survivors":${r.survivors
@@ -1245,6 +1247,7 @@ object Bench {
     def compactLine(withQueries: Boolean, withScale: Boolean): String =
       s"""{"metric":"total","value":${r3(total)},"unit":"sec"""" +
         s""","n_queries":${ok.size}$errsCompact$inlineCompact$interpCompact""" +
+        skippedJson +
         s""","degradation":${r3(degradation)}$tot2Compact""" +
         s""","steal_total_ms":$stealTotalMs""" +
         s""","storage_high_water_bytes":$storageHighWater""" +
@@ -1268,7 +1271,9 @@ object Bench {
     // after it in a combined-stream tail. The compact JSON is the final
     // thing this JVM writes to stdout (build.sbt's StdoutOutput +
     // showSuccess=false keep sbt from wrapping or following it).
-    spark.stop()
+    // a teardown failure must not swallow the line
+    scala.util.Try(spark.stop()).failed.foreach(e =>
+      System.err.println(s"[bench] spark.stop failed: $e"))
     System.out.println(line)
     System.out.flush()
   }

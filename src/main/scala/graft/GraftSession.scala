@@ -62,6 +62,10 @@ object GraftSession {
       // MICROS logical type is flagged UTC-adjusted, which the driver's
       // pandas side reads as tz-aware while DuckDB's oracle output is
       // naive → every timestamp column would mismatch.
+      // streaming checkpoint commits on file: roots rename without
+      // forking a process per file (see GraftCheckpointFileManager)
+      .config(graft.streaming.GraftCheckpointFileManager.ConfKey,
+        classOf[graft.streaming.GraftCheckpointFileManager].getName)
     // env overrides apply LAST so SPARK_GRAFT_CONF can override the
     // built-in keys above too (e.g. spark.sql.shuffle.partitions), the
     // way spark-submit --conf would (ADVICE r15)

@@ -30,8 +30,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - **pipe replay** (the safety net): the literal pipe-string
   *    algorithm, char-for-char the original. Used when the fast walk's
   *    token representation could alias the pipe encoding: a merge side
-  *    or the word containing `'|'`, a merge side containing `' '`, or
-  *    an empty merge side.
+  *    or the word containing `'|'`, a merge side containing `' '`, an
+  *    empty merge side, or (code-point units) a word containing a line
+  *    terminator, which the reference's `regexp_replace(w, "(.)", …)`
+  *    leaves un-piped.
   *
   * Equivalence of the two on the safe domain: in the pipe string, an
   * occurrence of `"|l| |r|"` exists iff tokens l,r are adjacent (no
@@ -130,6 +132,7 @@ object BpeCore {
   /** Fast merge walk, or null when this word needs the pipe replay. */
   def applyMergesFast(word: String, p: Plan): Array[String] = {
     if (!p.safe || word.indexOf('|') >= 0) return null
+    if (!p.charMode && hasLineTerminator(word)) return null
     val toks = splitUnits(word, p.charMode)
     if (toks.length <= 1 || p.lefts.length == 0) return toks
     var len = toks.length
@@ -182,16 +185,34 @@ object BpeCore {
     if (len == toks.length) toks else java.util.Arrays.copyOf(toks, len)
   }
 
+  /** Java regex line terminators: the code points `.` does not match
+    * without DOTALL. `\n` and `\r` never reach a word (the tokenizer
+    * splits on `\s`); U+0085, U+2028 and U+2029 are not `\s` and do. */
+  private def isLineTerminator(cp: Int): Boolean =
+    cp == '\n' || cp == '\r' || cp == 0x85 || cp == 0x2028 || cp == 0x2029
+
+  private def hasLineTerminator(word: String): Boolean = {
+    var i = 0
+    while (i < word.length) {
+      if (isLineTerminator(word.charAt(i))) return true
+      i += 1
+    }
+    false
+  }
+
   /** Literal pipe-string replay with the EXPRESSION tier's trims: units
     * are code points, split is regex-`" "` with limit -1, and each
     * token sheds its first and last code point (`substr(2, len-2)` —
-    * tokens under 2 code points become ""). */
+    * tokens under 2 code points become ""). Line terminators pass
+    * through un-piped, as `regexp_replace(w, "(.)", "|$1| ")` leaves
+    * them. */
   def pipeReplayExpr(word: String, p: Plan): Array[String] = {
     val sb = new java.lang.StringBuilder(word.length * 4)
     var i = 0
     while (i < word.length) {
       val cp = word.codePointAt(i)
-      sb.append('|').appendCodePoint(cp).append("| ")
+      if (isLineTerminator(cp)) sb.appendCodePoint(cp)
+      else sb.append('|').appendCodePoint(cp).append("| ")
       i += Character.charCount(cp)
     }
     // rtrim: strip trailing 0x20 only (the built string ends with one)

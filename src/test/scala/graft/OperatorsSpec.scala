@@ -829,6 +829,26 @@ class OperatorsSpec extends SparkSpec {
         .orderBy("doc_id").collect().map(_.getSeq[String](2).toList).toList
       assert(got == want, s"merges=$merges pat=$pat")
     }
+    // line terminators that survive the \s tokenizer — U+0085, U+2028,
+    // U+2029: the reference's regexp_replace(w, "(.)", …) leaves them
+    // un-piped (Java '.' excludes them) and `$` matches before a final
+    // one, so "abc" + U+2028 encodes to [ab, c, ""], not [ab, c, U+2028]
+    val lt = Seq((1L, "abc\u2028 a\u2028b \u0085ab ab\u2029ab\u2029"),
+      (2L, "ab\u2028\u2028 \u2029 x\u2028\u0085y|"))
+      .toDF("doc_id", "text")
+    for (merges <- Seq(Seq(("a", "b")), Seq(("a", "b"), ("ab", "c")),
+           Seq(("|", "a")));
+         pat <- Seq("^[a-z0-9]+$", "."); mark <- Seq(false, true)) {
+      val got = Vocab.bpeEncode(lt, "text", merges, wordPattern = pat,
+          markWordEnd = mark)
+        .orderBy("doc_id").collect().map(_.getSeq[String](2).toList).toList
+      val want = lt.withColumn("subwords", Vocab.bpeEncodeHofColumn(
+          col("text"), merges, pat, mark))
+        .orderBy("doc_id").collect().map(_.getSeq[String](2).toList).toList
+      assert(got == want, s"merges=$merges pat=$pat mark=$mark")
+    }
+    assert(Vocab.bpeEncode(Seq((1L, "abc\u2028")).toDF("doc_id", "text"),
+      "text", Seq(("a", "b"))).head().getSeq[String](2) == Seq("ab", "c", ""))
     // fixture corpus under learned merges: the production shape
     val docs = Tables.documents(spark, sfDir)
     val learned = Vocab.bpeMergesLocal(docs, "text", n = 8)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 
 /** Structured-Streaming ingestion semantics (SURVEY §2.9): micro-batch ≈
   * segment seal; rollup, dedup, upsert over an in-memory stream. */
@@ -78,6 +79,100 @@ class StreamingSpec extends SparkSpec {
     val revived = s.sql("""SELECT value, tombstoned FROM upsert_del_t
       WHERE ts = 300""").head()
     assert(revived.getDouble(0) == 7.0 && !revived.getBoolean(1))
+  }
+
+  test("upsert with deletes restarts from a local checkpoint: a stray " +
+      "offsets .tmp is ignored, state reads back from delta files, no batch " +
+      "is re-emitted") {
+    val s = spark
+    import s.implicits._
+    implicit val sq = s.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft-upsert-ckpt")
+    val ckpt = dir.resolve("ckpt")
+    val mem = MemoryStream[Streams.DeletableEvent]
+    val emitted = scala.collection.mutable.ArrayBuffer
+      .empty[(Long, Seq[Streams.DeletableOut])]
+    def start() = Streams.upsertLatestWithDeletes(mem.toDS())
+      .writeStream.outputMode("update")
+      .option("checkpointLocation", ckpt.toString)
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[Streams.DeletableOut],
+                       id: Long) => emitted += id -> b.collect().toSeq; () }
+      .start()
+    val q1 = start()
+    mem.addData(Streams.DeletableEvent(1L, "click", 100L, 1.0, false),
+      Streams.DeletableEvent(2L, "view", 100L, 2.0, false))
+    q1.processAllAvailable()
+    mem.addData(Streams.DeletableEvent(1L, "click", 200L, 0.0, true)) // delete
+    q1.processAllAvailable()
+    q1.stop()
+    // a crash mid-write of the next offset file leaves its temp file
+    java.nio.file.Files.write(ckpt.resolve("offsets").resolve(
+      s".2.${java.util.UUID.randomUUID()}.tmp"), "v1\n{".getBytes("UTF-8"))
+    // while the writer is down: a late older write of the deleted key and
+    // a newer write of the other key
+    mem.addData(Streams.DeletableEvent(1L, "click", 150L, 9.0, false),
+      Streams.DeletableEvent(2L, "view", 300L, 3.0, false))
+    val q2 = start()
+    q2.processAllAvailable()
+    q2.stop()
+    val stateFiles = java.nio.file.Files.walk(ckpt.resolve("state"))
+      .iterator().asScala.map(_.getFileName.toString).toSeq
+    assert(stateFiles.contains("1.delta") && stateFiles.contains("2.delta"))
+    assert(emitted.map(_._1) == Seq(0L, 1L, 2L)) // batches 0-1 not re-run
+    val afterRestart = emitted.last._2
+      .map(o => (o.userId, o.eventType) -> o).toMap
+    // the tombstone came back from the delta files: the late write lost
+    assert(afterRestart((1L, "click")) ==
+      Streams.DeletableOut(1L, "click", 200L, 0.0, tombstoned = true))
+    assert(afterRestart((2L, "view")) ==
+      Streams.DeletableOut(2L, "view", 300L, 3.0, tombstoned = false))
+  }
+
+  test("checkpoint file manager: local roots commit through the FileSystem " +
+      "API, other schemes keep Spark's choice, no-overwrite still throws") {
+    import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
+    import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
+    import graft.streaming.GraftCheckpointFileManager
+    import graft.testkit.FakeSchemeFs
+    val dir = java.nio.file.Files.createTempDirectory("graft-cfm").toString
+    val conf = spark.sessionState.newHadoopConf()
+    def graftManager(p: Path): GraftCheckpointFileManager =
+      CheckpointFileManager.create(p, conf) match {
+        case m: GraftCheckpointFileManager => m
+        case other => fail(s"session conf did not select the manager: $other")
+      }
+    for (p <- Seq(new Path(s"file:$dir"), new Path(dir))) // no scheme: fs.defaultFS
+      assert(graftManager(p).delegate
+        .isInstanceOf[FileSystemBasedCheckpointFileManager], p)
+    // a non-local scheme gets exactly the manager Spark would pick
+    conf.set(s"fs.AbstractFileSystem.${FakeSchemeFs.Scheme}.impl",
+      classOf[FakeSchemeFs].getName)
+    val remote = new Path(s"${FakeSchemeFs.Scheme}://$dir")
+    assert(graftManager(remote).delegate
+      .isInstanceOf[FileContextBasedCheckpointFileManager])
+    assert(GraftCheckpointFileManager.isLocalScheme("file"))
+    assert(!Seq("hdfs", "s3a", "abfss", FakeSchemeFs.Scheme)
+      .exists(GraftCheckpointFileManager.isLocalScheme))
+
+    // HDFSMetadataLog detects a second writer of a batch by this throw
+    val fm = graftManager(new Path(s"file:$dir"))
+    val f = new Path(s"file:$dir/0")
+    def write(overwrite: Boolean, text: String): Unit = {
+      val out = fm.createAtomic(f, overwriteIfPossible = overwrite)
+      out.write(text.getBytes("UTF-8"))
+      try out.close() catch { case e: Throwable => out.cancel(); throw e }
+    }
+    def read(): String = {
+      val in = fm.open(f)
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    }
+    write(overwrite = false, "first")
+    intercept[FileAlreadyExistsException](write(overwrite = false, "second"))
+    assert(read() == "first")
+    // overwriting is best effort (Spark's contract): it must not throw;
+    // whether the file is replaced is up to the FileSystem's rename
+    write(overwrite = true, "third")
+    assert(Set("first", "third")(read()))
   }
 
   test("streaming partial upsert merges strategies incrementally") {
