@@ -1144,7 +1144,7 @@ object Bench {
             s""","super_linear_cold":${superLinearCold.map(jstr)
               .mkString("[", ",", "]")}""" +
             s""","worst_warm_ratio":${jmap(worst)}""" +
-            s""","worst_isolated":${jmap(worstIso)}}"""
+            s""","worst_isolated_sec":${jmap(worstIso)}}"""
         s""","scale":{"factor":$scaleFactor,"bytes_factor":$bytesFactor""" +
           s""","prep_sec":$prepSec""" +
           s""","queries":${jmap(okS.map(r =>

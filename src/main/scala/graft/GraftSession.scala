@@ -72,6 +72,15 @@ object GraftSession {
     envConfs.foldLeft(base) { case (b, (k, v)) => b.config(k, v) }
   }
 
+  /** Warehouse directory `name` scoped by the Spark APPLICATION id: two
+    * concurrent sessions (parallel test runs, bench + tests) writing the
+    * same table/index names get disjoint directories instead of deleting
+    * each other's live data. The layout dies with the app, like the
+    * in-memory catalog that names it (a real cluster swaps in a
+    * persistent metastore + durable warehouse path). */
+  def appDir(spark: SparkSession, name: String): String =
+    s"/tmp/graft-warehouse/apps/${spark.sparkContext.applicationId}/$name"
+
   def local(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = builder(cpus).getOrCreate()

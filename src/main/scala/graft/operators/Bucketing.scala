@@ -26,14 +26,9 @@ object Bucketing {
 
   private val DbName = "graft_bucketed"
 
-  /** Warehouse location scoped by the Spark APPLICATION id: two concurrent
-    * sessions (parallel test runs, bench + tests) writing the same
-    * table/index names get disjoint directories instead of deleting each
-    * other's live data. The layout dies with the app, like the in-memory
-    * catalog that names it (a real cluster swaps in a persistent metastore
-    * + durable warehouse path; the mechanics are identical). */
+  /** Warehouse location scoped by the Spark application id. */
   private def dbLocation(spark: SparkSession): String =
-    s"/tmp/graft-warehouse/apps/${spark.sparkContext.applicationId}/$DbName"
+    graft.GraftSession.appDir(spark, DbName)
 
   private def ensureDb(spark: SparkSession): Unit =
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $DbName " +

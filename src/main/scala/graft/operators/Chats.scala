@@ -431,8 +431,7 @@ object Chats {
                       name: String): graft.sources.IncrementalIndex.Spec = {
     require(name.matches("[A-Za-z0-9_]+"), s"bad sft corpus name: $name")
     graft.sources.IncrementalIndex.Spec(
-      s"/tmp/graft-warehouse/apps/" +
-        s"${spark.sparkContext.applicationId}/sft_idx",
+      graft.GraftSession.appDir(spark, "sft_idx"),
       s"${name}_sft", None)
   }
 
@@ -503,13 +502,8 @@ object Chats {
     * append. */
   def loadSftCorpus(spark: org.apache.spark.sql.SparkSession,
                     name: String): DataFrame = {
-    val sp = sftSpec(spark, name)
-    if (!new java.io.File(sp.liveDir).isDirectory)
-      spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "id string, text string, n_turns bigint"))
-    else graft.sources.IncrementalIndex.load(spark, sp, "id")
+    graft.sources.IncrementalIndex.loadOrEmpty(spark, sftSpec(spark, name),
+      "id", "id string, text string, n_turns bigint")
   }
 
   def dropSftCorpus(spark: org.apache.spark.sql.SparkSession,

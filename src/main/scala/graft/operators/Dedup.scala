@@ -717,13 +717,9 @@ object Dedup {
     * disk, so a live index's own width always overrides the caller's
     * knob (the knob takes effect on the index's FIRST batch). */
   private def persistedPrefixWidth(spec: graft.sources.IncrementalIndex.Spec)
-  : Option[Int] = {
-    val live = new java.io.File(spec.liveDir)
-    if (!live.isDirectory) None
-    else Option(live.listFiles()).toSeq.flatten
-      .collectFirst { case f if f.isDirectory &&
-        f.getName.startsWith("hp=h") => f.getName.length - 4 }
-  }
+  : Option[Int] =
+    graft.sources.IncrementalIndex.partitionValues(spec)
+      .collectFirst { case v if v.startsWith("h") => v.length - 1 }
 
   /** Directory spec of a named incremental-dedup index — app-scoped like
     * [[Bucketing]]'s warehouse, partitioned by the `hp` hash prefix. */
@@ -732,8 +728,7 @@ object Dedup {
   : graft.sources.IncrementalIndex.Spec = {
     require(name.matches("[A-Za-z0-9_]+"), s"bad index name: $name")
     graft.sources.IncrementalIndex.Spec(
-      s"/tmp/graft-warehouse/apps/" +
-        s"${spark.sparkContext.applicationId}/dedup_idx",
+      graft.GraftSession.appDir(spark, "dedup_idx"),
       name, Some("hp"))
   }
 

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.IncrementalIndex
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -25,8 +26,7 @@ object Frontier {
   : graft.sources.IncrementalIndex.Spec = {
     require(name.matches("[A-Za-z0-9_]+"), s"bad frontier name: $name")
     graft.sources.IncrementalIndex.Spec(
-      s"/tmp/graft-warehouse/apps/" +
-        s"${spark.sparkContext.applicationId}/frontier_idx",
+      graft.GraftSession.appDir(spark, "frontier_idx"),
       s"${name}_$sub", None)
   }
 
@@ -50,20 +50,6 @@ object Frontier {
     graft.sources.IncrementalIndex.append(spark, spec(spark, name, "fet"),
       urls.select(col(urlCol).as("url")), batchTag)
 
-  /** Ledger load with the before-first-append guard (ADVICE r14):
-    * querying a frontier before anything was appended must return an
-    * EMPTY frame of the ledger's schema, not throw a parquet path
-    * error — [[latestHashes]] always had this; [[pending]] and
-    * [[discoveredPartials]] now share it. */
-  private def loadOrEmpty(spark: org.apache.spark.sql.SparkSession,
-                          sp: graft.sources.IncrementalIndex.Spec,
-                          ddl: String): DataFrame =
-    if (!new java.io.File(sp.liveDir).isDirectory)
-      spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType.fromDDL(ddl))
-    else graft.sources.IncrementalIndex.load(spark, sp, "url")
-
   /** The pending frontier: every url sighted but not yet fetched, with
     * OR-folded provenance — (url, from_sitemap, from_link). One keyed
     * agg over the discovery partials + one anti-join on fetch receipts
@@ -72,13 +58,14 @@ object Frontier {
     * error) before the first discovery append. */
   def pending(spark: org.apache.spark.sql.SparkSession, name: String)
   : DataFrame = {
-    val disc = loadOrEmpty(spark, spec(spark, name, "disc"),
-        "url string, from_sitemap boolean, from_link boolean")
+    // empty, not a parquet path error, before the first append (ADVICE r14)
+    val disc = IncrementalIndex.loadOrEmpty(spark, spec(spark, name, "disc"),
+        "url", "url string, from_sitemap boolean, from_link boolean")
       .groupBy(col("url"))
       .agg(max(col("from_sitemap")).as("from_sitemap"),
         max(col("from_link")).as("from_link"))
-    val fetched = loadOrEmpty(spark, spec(spark, name, "fet"),
-        "url string")
+    val fetched = IncrementalIndex.loadOrEmpty(spark, spec(spark, name, "fet"),
+        "url", "url string")
       .select(col("url")).distinct()
     disc.join(fetched, Seq("url"), "left_anti")
   }
@@ -88,7 +75,7 @@ object Frontier {
     * Empty (not an error) before the first append. */
   private[graft] def discoveredPartials(
       spark: org.apache.spark.sql.SparkSession, name: String): DataFrame =
-    loadOrEmpty(spark, spec(spark, name, "disc"),
+    IncrementalIndex.loadOrEmpty(spark, spec(spark, name, "disc"), "url",
       "url string, from_sitemap boolean, from_link boolean")
 
   /** Has this batch tag already committed to the discovery ledger? */
@@ -116,7 +103,8 @@ object Frontier {
   private def loadChg(spark: org.apache.spark.sql.SparkSession,
                       sp: graft.sources.IncrementalIndex.Spec)
   : DataFrame = {
-    val raw = graft.sources.IncrementalIndex.load(spark, sp, "url",
+    val raw = IncrementalIndex.loadOrEmpty(spark, sp, "url",
+      "url string, h bigint, etag string, last_modified string, seq bigint",
       mergeSchema = true)
     Seq("etag", "last_modified").foldLeft(raw) { (d, c) =>
       if (d.columns.contains(c)) d
@@ -128,11 +116,7 @@ object Frontier {
     * the first append (every first-batch url is "never seen"). */
   private def latestHashes(spark: org.apache.spark.sql.SparkSession,
                            name: String): DataFrame = {
-    val sp = spec(spark, name, "chg")
-    if (!new java.io.File(sp.liveDir).isDirectory) {
-      import spark.implicits._
-      Seq.empty[(String, Long)].toDF("__pu", "__ph")
-    } else loadChg(spark, sp)
+    loadChg(spark, spec(spark, name, "chg"))
       .groupBy(col("url"))
       .agg(max(struct(col("seq"), col("h"))).as("__last"))
       .select(col("url").as("__pu"), col("__last")("h").as("__ph"))
@@ -198,11 +182,7 @@ object Frontier {
     * join onto the next revisit batch ([[withConditional]]). */
   def latestReceipts(spark: org.apache.spark.sql.SparkSession,
                      name: String): DataFrame = {
-    val sp = spec(spark, name, "chg")
-    if (!new java.io.File(sp.liveDir).isDirectory)
-      loadOrEmpty(spark, sp,
-        "url string, cond_etag string, cond_last_modified string")
-    else loadChg(spark, sp)
+    loadChg(spark, spec(spark, name, "chg"))
       .groupBy(col("url"))
       .agg(max(struct(col("seq"), col("h"), col("etag"),
         col("last_modified"))).as("__last"))
@@ -243,20 +223,13 @@ object Frontier {
                              etagCol: String, lastModifiedCol: String,
                              name: String, batchSeq: Long,
                              batchTag: String): DataFrame = {
-    val led = {
-      val sp = spec(spark, name, "chg")
-      if (!new java.io.File(sp.liveDir).isDirectory) {
-        import spark.implicits._
-        Seq.empty[(String, Long, String, String)]
-          .toDF("__pu", "__ph", "__pe", "__plm")
-      } else loadChg(spark, sp)
-        .groupBy(col("url"))
-        .agg(max(struct(col("seq"), col("h"), col("etag"),
-          col("last_modified"))).as("__last"))
-        .select(col("url").as("__pu"), col("__last")("h").as("__ph"),
-          col("__last")("etag").as("__pe"),
-          col("__last")("last_modified").as("__plm"))
-    }
+    val led = loadChg(spark, spec(spark, name, "chg"))
+      .groupBy(col("url"))
+      .agg(max(struct(col("seq"), col("h"), col("etag"),
+        col("last_modified"))).as("__last"))
+      .select(col("url").as("__pu"), col("__last")("h").as("__ph"),
+        col("__last")("etag").as("__pe"),
+        col("__last")("last_modified").as("__plm"))
     val notMod = col(statusCol) === 304
     // ONE snapshot of the (batch ⋈ latest-receipts) join per round
     // (optimization round 19): both the changed set and the 304 carry
@@ -406,20 +379,14 @@ object Frontier {
     * keyed agg over the ledger (receipts, never the corpus). */
   def changeRates(spark: org.apache.spark.sql.SparkSession,
                   name: String): DataFrame = {
-    val sp = spec(spark, name, "chg")
-    if (!new java.io.File(sp.liveDir).isDirectory)
-      loadOrEmpty(spark, sp,
-        "url string, n_revisits bigint, n_changed bigint")
-    else {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("url")).orderBy(col("seq"))
-      loadChg(spark, sp)
-        .withColumn("__ph", lag(col("h"), 1).over(w))
-        .groupBy(col("url"))
-        .agg((count(lit(1)) - 1).as("n_revisits"),
-          sum(when(col("__ph").isNotNull && col("h") =!= col("__ph"), 1L)
-            .otherwise(0L)).as("n_changed"))
-    }
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("url")).orderBy(col("seq"))
+    loadChg(spark, spec(spark, name, "chg"))
+      .withColumn("__ph", lag(col("h"), 1).over(w))
+      .groupBy(col("url"))
+      .agg((count(lit(1)) - 1).as("n_revisits"),
+        sum(when(col("__ph").isNotNull && col("h") =!= col("__ph"), 1L)
+          .otherwise(0L)).as("n_changed"))
   }
 
   /** CHANGE-RATE-ADAPTIVE revisit scheduling — closes the crawl-

@@ -192,8 +192,7 @@ object LinkGraph {
   : graft.sources.IncrementalIndex.Spec = {
     require(name.matches("[A-Za-z0-9_]+"), s"bad index name: $name")
     graft.sources.IncrementalIndex.Spec(
-      s"/tmp/graft-warehouse/apps/" +
-        s"${spark.sparkContext.applicationId}/linkgraph_idx",
+      graft.GraftSession.appDir(spark, "linkgraph_idx"),
       name, None)
   }
 

@@ -515,8 +515,7 @@ object Packing {
   : graft.sources.IncrementalIndex.Spec = {
     require(name.matches("[A-Za-z0-9_]+"), s"bad manifest name: $name")
     graft.sources.IncrementalIndex.Spec(
-      s"/tmp/graft-warehouse/apps/" +
-        s"${spark.sparkContext.applicationId}/manifest_idx",
+      graft.GraftSession.appDir(spark, "manifest_idx"),
       s"${name}_manifest", None)
   }
 
@@ -606,14 +605,10 @@ object Packing {
     * error) before the first append. */
   def loadManifest(spark: org.apache.spark.sql.SparkSession,
                    name: String): DataFrame = {
-    val sp = manifestSpec(spark, name)
-    if (!new java.io.File(sp.liveDir).isDirectory)
-      spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "shard bigint, n_docs bigint, n_tokens bigint, " +
-            "min_id bigint, max_id bigint, fingerprint bigint"))
-    else graft.sources.IncrementalIndex.load(spark, sp, "shard")
+    graft.sources.IncrementalIndex.loadOrEmpty(spark,
+        manifestSpec(spark, name), "shard",
+        "shard bigint, n_docs bigint, n_tokens bigint, " +
+          "min_id bigint, max_id bigint, fingerprint bigint")
       .groupBy(col("shard"))
       .agg(sum(col("n_docs")).cast("long").as("n_docs"),
         sum(col("n_tokens")).cast("long").as("n_tokens"),

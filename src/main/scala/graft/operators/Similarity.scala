@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.Vectors
+import graft.sources.IncrementalIndex
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -201,13 +202,23 @@ object Similarity {
     ivfTopKWith(ivfIndex(corpus, idCol, vecCol, nCentroids, cacheKey),
       queries, idCol, vecCol, k, nProbe)
 
+  /** Directory layout of a persisted IVF index: the cell-partitioned
+    * `assigned` table lives on the [[IncrementalIndex]] protocol (its
+    * tag, tombstone, staging and compaction dirs are the protocol's
+    * `assigned_*` siblings); the centroids ride alongside at
+    * `$dir/centroids`. */
+  def ivfSpec(dir: String): IncrementalIndex.Spec =
+    IncrementalIndex.Spec(dir, "assigned", Some("cell"))
+
   /** Persist a built IVF index with CELLS AS PARTITION KEYS — the on-disk
     * layout of the 100 TB story above: each query's probes prune to
     * nProbe cell directories, co-located and scannable without touching
-    * the rest of the corpus. Centroids (tiny) ride alongside. */
+    * the rest of the corpus. Centroids (tiny) ride alongside. A
+    * re-persist replaces the whole index: committed tags and tombstones
+    * of an earlier index at `dir` are dropped, so they can neither hide
+    * ids of the new one nor turn its appends into replays. */
   def persistIvfIndex(index: IvfIndex, dir: String): Unit = {
-    index.assigned.write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$dir/assigned")
+    IncrementalIndex.rebuild(ivfSpec(dir), index.assigned)
     index.centroids.write.mode("overwrite").parquet(s"$dir/centroids")
   }
 
@@ -217,103 +228,46 @@ object Similarity {
     * [[deleteFromIvfIndex]]) are subtracted with one anti-join against
     * the (tiny) tombstone table, so deletes are visible immediately
     * without rewriting the index; [[compactIvfIndex]] folds them in. A
-    * half-committed compaction swap is completed first ([[recoverIvf]]). */
+    * half-committed compaction swap is completed first. */
   def loadIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String)
-  : IvfIndex = {
-    recoverIvf(dir)
-    val assigned = spark.read.parquet(s"$dir/assigned")
-    val live =
-      if (!new java.io.File(s"$dir/tombstones").isDirectory ||
-          new java.io.File(s"$dir/tombstones").listFiles().isEmpty) assigned
-      else assigned.join(
-        broadcast(spark.read.parquet(s"$dir/tombstones")
-          .select(col("cand_id")).distinct()),
-        Seq("cand_id"), "left_anti")
-    IvfIndex(live, spark.read.parquet(s"$dir/centroids"))
-  }
+  : IvfIndex =
+    IvfIndex(IncrementalIndex.load(spark, ivfSpec(dir), "cand_id"),
+      spark.read.parquet(s"$dir/centroids"))
 
   /** Tombstone `ids` out of a persisted IVF index — the delete half of
     * the daily-pipeline lifecycle (docs dropped by curation/dedup must
-    * leave the ANN index too). The id set lands as a tag-scoped parquet
-    * under `tombstones/` (overwrite mode — a replayed delete batch
-    * rewrites the same path, naturally idempotent); readers subtract
-    * tombstones at load, [[compactIvfIndex]] makes them physical.
-    * Tombstones are by id and win until compaction: re-appending a
-    * deleted id requires a compact between delete and append. */
+    * leave the ANN index too). The id set lands as a tag-scoped
+    * tombstone parquet (a replayed delete batch rewrites the same path,
+    * naturally idempotent); readers subtract tombstones at load,
+    * [[compactIvfIndex]] makes them physical. Tombstones are by id and
+    * win until compaction: re-appending a deleted id requires a compact
+    * between delete and append. */
   def deleteFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
                          dir: String, ids: DataFrame, idCol: String,
-                         batchTag: String): Unit = {
-    recoverIvf(dir)
-    // tag rides as a hive-style partition dir so the whole tombstones
-    // tree reads back as ONE partitioned table
-    ids.select(col(idCol).cast("long").as("cand_id")).distinct()
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/tombstones/tag=$batchTag")
-  }
+                         batchTag: String): Unit =
+    IncrementalIndex.delete(spark, ivfSpec(dir),
+      ids.select(col(idCol).cast("long").as("cand_id")), "cand_id", batchTag)
 
   /** Fold tombstones into the index files: rewrite each cell without the
     * deleted rows (and, as a side effect, merge the per-append tag files
     * into one compacted file set per cell — the small-file compaction a
-    * long-lived append stream needs). Crash-safe and replay-idempotent:
-    * the compacted copy stages under `assigned_compact_tmp` (overwrite),
-    * then a two-rename swap (`assigned`→`assigned_retiring`, tmp→
-    * `assigned`) commits it; [[recoverIvf]] completes a swap interrupted
-    * between the renames, and re-running compact after success is a
-    * harmless full rewrite. Append markers under `tags/` survive
-    * compaction, so a pre-compaction append batch replayed later still
-    * no-ops. */
+    * long-lived append stream needs). Crash-safe and replay-idempotent
+    * through the protocol's staged swap; committed append tags
+    * survive compaction, so a pre-compaction append batch replayed later
+    * still no-ops. */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): Unit = {
-    recoverIvf(dir)
-    val live = loadIvfIndex(spark, dir).assigned
-    val tmp = s"$dir/assigned_compact_tmp"
-    live.write.mode("overwrite").partitionBy("cell").parquet(tmp)
-    val root = java.nio.file.Paths.get(dir)
-    val retiring = root.resolve("assigned_retiring")
-    deleteIndexDir(retiring.toString) // stale from a prior crashed run
-    java.nio.file.Files.move(root.resolve("assigned"), retiring)
-    java.nio.file.Files.move(root.resolve("assigned_compact_tmp"),
-      root.resolve("assigned"))
-    deleteIndexDir(retiring.toString)
-    deleteIndexDir(s"$dir/tombstones")
-  }
-
-  /** Complete a compaction swap interrupted between its two renames: if
-    * `assigned` is missing but the staged copy exists, promote it;
-    * leftover `assigned_retiring`/`tombstones` from a crash after the
-    * swap are dropped (the compacted files already exclude them). */
-  private def recoverIvf(dir: String): Unit = {
-    val root = java.nio.file.Paths.get(dir)
-    val assigned = root.resolve("assigned")
-    val tmp = root.resolve("assigned_compact_tmp")
-    val retiring = root.resolve("assigned_retiring")
-    if (!java.nio.file.Files.isDirectory(assigned) &&
-        java.nio.file.Files.isDirectory(tmp)) {
-      java.nio.file.Files.move(tmp, assigned)
-      deleteIndexDir(retiring.toString)
-      deleteIndexDir(s"$dir/tombstones")
-    } else if (java.nio.file.Files.isDirectory(assigned) &&
-        java.nio.file.Files.isDirectory(retiring)) {
-      deleteIndexDir(retiring.toString)
-      deleteIndexDir(s"$dir/tombstones")
-    }
-  }
+                      dir: String): Unit =
+    IncrementalIndex.compact(spark, ivfSpec(dir), "cand_id")
 
   /** Append a batch of vectors to a persisted IVF index WITHOUT
     * retraining: each new vector joins the cell of its nearest existing
     * centroid (argmin L2, ties to the lowest cell — the same ordering
     * the probe side uses, so an appended exact twin of a query vector
     * always lands in the query's first probe cell). Appends are
-    * `batchTag`-idempotent via a marker file, the same at-least-once
+    * `batchTag`-idempotent and crash-safe in either direction through
+    * the protocol's staged commit — the same at-least-once
     * delivery contract as the incremental dedup indexes: a replayed
     * batch is a no-op, so a restarted ingestion job cannot double-index.
-    * The commit is crash-safe in either direction: the batch stages
-    * under a tag-scoped temp path, lands in the index as files with a
-    * deterministic `tag-<batchTag>-` prefix (a replay first sweeps any
-    * partial prior move of the same tag, so a crash mid-move cannot
-    * leave doubled rows), and the marker is written only after the move
-    * completes — a crash before the marker replays cleanly, a crash
-    * after it no-ops.
     *
     * Scale shape: one broadcast of the (tiny) centroid frame against the
     * BATCH only — the indexed corpus is never re-read — and a
@@ -324,65 +278,18 @@ object Similarity {
   def appendIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                      batch: DataFrame, idCol: String, vecCol: String,
                      batchTag: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    recoverIvf(dir)
-    val marker = new java.io.File(s"$dir/tags/$batchTag")
-    if (marker.isFile) return
     val centroids = spark.read.parquet(s"$dir/centroids")
     val w = Window.partitionBy(col("cand_id"))
       .orderBy(col("cdist"), col("cell"))
-    val staging = s"$dir/staging/$batchTag"
-    // overwrite mode makes the staging write itself replay-safe
-    batch.select(col(idCol).as("cand_id"), col(vecCol).as("cv"),
-        Vectors.norm2(col(vecCol)).as("cn"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("cdist", Vectors.l2Distance(col("cv"), col("centroid")))
-      .withColumn("pr", row_number().over(w))
-      .filter(col("pr") === 1)
-      .select(col("cand_id"), col("cv"), col("cn"), col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(staging)
-    // sweep any partial prior move of this tag, then move staged files
-    // in under deterministic tag-prefixed names
-    val assignedRoot = Paths.get(s"$dir/assigned")
-    val prefix = s"tag-$batchTag-"
-    if (Files.isDirectory(assignedRoot)) {
-      val st = Files.walk(assignedRoot)
-      try {
-        import scala.jdk.CollectionConverters._
-        st.iterator().asScala.toSeq
-          .filter(p => p.getFileName.toString.startsWith(prefix))
-          .foreach(p => Files.deleteIfExists(p))
-      } finally st.close()
-    }
-    val sst = Files.walk(Paths.get(staging))
-    try {
-      import scala.jdk.CollectionConverters._
-      sst.iterator().asScala.toSeq
-        .filter(p => Files.isRegularFile(p) &&
-          p.getFileName.toString.endsWith(".parquet"))
-        .foreach { p =>
-          val cellDir = p.getParent.getFileName.toString // cell=<n>
-          val dst = assignedRoot.resolve(cellDir)
-          Files.createDirectories(dst)
-          Files.move(p, dst.resolve(prefix + p.getFileName.toString),
-            StandardCopyOption.REPLACE_EXISTING)
-        }
-    } finally sst.close()
-    marker.getParentFile.mkdirs()
-    Files.write(marker.toPath, batchTag.getBytes("UTF-8"))
-    deleteIndexDir(staging)
-  }
-
-  /** Recursive local delete (index rebuild hygiene for the gates). */
-  def deleteIndexDir(dir: String): Unit = {
-    val root = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(root)) {
-      import scala.jdk.CollectionConverters._
-      val st = java.nio.file.Files.walk(root)
-      try st.iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      finally st.close()
-    }
+    IncrementalIndex.append(spark, ivfSpec(dir),
+      batch.select(col(idCol).as("cand_id"), col(vecCol).as("cv"),
+          Vectors.norm2(col(vecCol)).as("cn"))
+        .crossJoin(broadcast(centroids))
+        .withColumn("cdist", Vectors.l2Distance(col("cv"), col("centroid")))
+        .withColumn("pr", row_number().over(w))
+        .filter(col("pr") === 1)
+        .select(col("cand_id"), col("cv"), col("cn"), col("cell")),
+      batchTag)
   }
 
   /** [[ivfTopK]] over an already-built (or disk-loaded) index. */

@@ -33,7 +33,7 @@ object TrainingQueries {
     val batch = emb.select((col("vec_id") + 500000L).as("vec_id"),
       col("embedding"), col("label"))
     val dir = ivfAppendDir(d)
-    Similarity.deleteIndexDir(dir)
+    graft.sources.IncrementalIndex.rmTree(dir)
     Similarity.persistIvfIndex(
       Similarity.ivfIndex(emb, "vec_id", "embedding", 8,
         cacheKey = None), dir)
@@ -43,9 +43,9 @@ object TrainingQueries {
 
   private def ensureIvfAppendIndex(s: org.apache.spark.sql.SparkSession,
                                    d: String): Unit = {
-    val dir = ivfAppendDir(d)
-    if (!new java.io.File(s"$dir/tags/b1").isFile ||
-        !new java.io.File(s"$dir/assigned").isDirectory)
+    val ix = Similarity.ivfSpec(ivfAppendDir(d))
+    if (!graft.sources.IncrementalIndex.hasTag(ix, "b1") ||
+        !graft.sources.IncrementalIndex.exists(ix))
       buildIvfAppendIndex(s, d)
   }
 
@@ -63,7 +63,7 @@ object TrainingQueries {
                                 d: String): Unit = {
     val emb = Tables.embeddings(s, d)
     val dir = ivfLifecycleDir(d)
-    Similarity.deleteIndexDir(dir)
+    graft.sources.IncrementalIndex.rmTree(dir)
     Similarity.persistIvfIndex(
       Similarity.ivfIndex(emb, "vec_id", "embedding", 8,
         cacheKey = None), dir)
@@ -84,9 +84,9 @@ object TrainingQueries {
 
   private def ensureIvfLifecycle(s: org.apache.spark.sql.SparkSession,
                                  d: String): Unit = {
-    val dir = ivfLifecycleDir(d)
-    if (!new java.io.File(s"$dir/tags/b2").isFile ||
-        !new java.io.File(s"$dir/assigned").isDirectory)
+    val ix = Similarity.ivfSpec(ivfLifecycleDir(d))
+    if (!graft.sources.IncrementalIndex.hasTag(ix, "b2") ||
+        !graft.sources.IncrementalIndex.exists(ix))
       buildIvfLifecycle(s, d)
   }
 
@@ -152,7 +152,7 @@ object TrainingQueries {
     val centroids = s.createDataFrame(
       cells.zipWithIndex.toSeq.map { case (c, i) => (i, c) })
       .toDF("cell", "centroid")
-    Similarity.deleteIndexDir(s"$root/ivf")
+    graft.sources.IncrementalIndex.rmTree(s"$root/ivf")
     Similarity.persistIvfIndex(Similarity.IvfIndex(assigned, centroids),
       s"$root/ivf")
   }
@@ -160,8 +160,9 @@ object TrainingQueries {
   private def ensureHybridIndexes(s: org.apache.spark.sql.SparkSession,
                                   d: String): Unit = {
     val root = hybIdxRoot(d)
-    if (!new java.io.File(s"$root/text_text_tags/b1").isFile ||
-        !new java.io.File(s"$root/ivf/assigned").isDirectory)
+    if (!graft.sources.TextIndexLifecycle.hasTag(root, "text", "b1") ||
+        !graft.sources.IncrementalIndex.exists(
+          Similarity.ivfSpec(s"$root/ivf")))
       buildHybridIndexes(s, d)
   }
 

@@ -53,6 +53,10 @@ object TextIndexLifecycle {
   def postingsDir(indexRoot: String, column: String): String =
     spec(indexRoot, column).liveDir
 
+  /** Has `batchTag`'s postings append committed? */
+  def hasTag(indexRoot: String, column: String, batchTag: String): Boolean =
+    IncrementalIndex.hasTag(spec(indexRoot, column), batchTag)
+
   /** Drop the whole index (all lifecycle dirs) — gate/test hygiene. */
   def deleteRoot(indexRoot: String): Unit = IncrementalIndex.rmTree(indexRoot)
 
@@ -100,7 +104,8 @@ object TextIndexLifecycle {
     // Tombstones are deliberately NOT subtracted — the dictionary
     // over-claims by design; a retired token's candidates find no
     // postings rows in the semi-join.
-    val orphaned = perTag.exists(_._2.isEmpty) && hasBaseFiles(ps)
+    val orphaned =
+      perTag.exists(_._2.isEmpty) && IncrementalIndex.hasBaseFiles(ps)
     val delta =
       if (orphaned)
         Some(spark.read.parquet(ps.liveDir)
@@ -118,30 +123,11 @@ object TextIndexLifecycle {
     pending.foreach(IncrementalIndex.markTag(vs, _))
   }
 
-  /** Does the postings live dir hold compacted base files (plain
-    * `part-` names, no `tag-` prefix)? */
-  private def hasBaseFiles(ps: IncrementalIndex.Spec): Boolean = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val root = Paths.get(ps.liveDir)
-    Files.isDirectory(root) && {
-      val st = Files.walk(root)
-      try st.iterator().asScala.exists(p => Files.isRegularFile(p) &&
-        p.getFileName.toString.endsWith(".parquet") &&
-        !p.getFileName.toString.startsWith("tag-"))
-      finally st.close()
-    }
-  }
-
   /** The persisted term dictionary, folded up to date first (see
     * [[foldVocab]]); None only when the index holds no tokens at all. */
   def loadVocab(spark: SparkSession, indexRoot: String, column: String)
   : Option[DataFrame] = {
     val vs = vocabSpec(indexRoot, column)
-    // heal an interrupted compaction swap BEFORE the exists probe: a
-    // crash between its two renames leaves no live dir (only tmp), and
-    // a bare exists() would misread that as "no dictionary" forever
-    IncrementalIndex.recover(vs)
     foldVocab(spark, indexRoot, column)
     if (!IncrementalIndex.exists(vs)) None
     else Some(IncrementalIndex.load(spark, vs, "token").distinct())

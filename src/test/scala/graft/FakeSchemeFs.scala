@@ -17,6 +17,8 @@ object FakeSchemeFs {
   val Scheme = "graftfake"
 }
 
+/** The same `graftfake:` scheme for Hadoop's `FileSystem` API
+  * (`fs.graftfake.impl`), e.g. as a non-local index root. */
 class FakeSchemeRawFs extends RawLocalFileSystem {
   override def getUri: URI = URI.create(s"${FakeSchemeFs.Scheme}:///")
   override def getScheme: String = FakeSchemeFs.Scheme

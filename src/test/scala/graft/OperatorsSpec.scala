@@ -202,7 +202,7 @@ class OperatorsSpec extends SparkSpec {
       (4L, Array(0f, 10f)), (5L, Array(1f, 11f)), (6L, Array(0.5f, 10.5f))
     ).toDF("vec_id", "embedding")
     val dir = "target/graft_ivf_append_spec"
-    Similarity.deleteIndexDir(dir)
+    graft.sources.IncrementalIndex.rmTree(dir)
     Similarity.persistIvfIndex(
       Similarity.ivfIndex(base, "vec_id", "embedding", 2, cacheKey = None),
       dir)
@@ -228,7 +228,7 @@ class OperatorsSpec extends SparkSpec {
       Seq((200L, Array(9f, 1f))).toDF("vec_id", "embedding"),
       "vec_id", "embedding", "t2")
     assert(Similarity.loadIvfIndex(s, dir).assigned.count() == 9L)
-    Similarity.deleteIndexDir(dir)
+    graft.sources.IncrementalIndex.rmTree(dir)
   }
 
   test("IVF index lifecycle: delete tombstones immediately, compact folds " +
@@ -240,7 +240,7 @@ class OperatorsSpec extends SparkSpec {
       (4L, Array(0f, 10f)), (5L, Array(1f, 11f)), (6L, Array(0.5f, 10.5f))
     ).toDF("vec_id", "embedding")
     val dir = "target/graft_ivf_lifecycle_spec"
-    Similarity.deleteIndexDir(dir)
+    graft.sources.IncrementalIndex.rmTree(dir)
     Similarity.persistIvfIndex(
       Similarity.ivfIndex(base, "vec_id", "embedding", 2, cacheKey = None),
       dir)
@@ -263,7 +263,7 @@ class OperatorsSpec extends SparkSpec {
     assert(Similarity.loadIvfIndex(s, dir).assigned.count() == 7L)
     // compact: physical removal + tombstones cleared + files merged
     Similarity.compactIvfIndex(s, dir)
-    assert(!new java.io.File(s"$dir/tombstones").isDirectory)
+    assert(!new java.io.File(Similarity.ivfSpec(dir).tombsDir).isDirectory)
     assert(Similarity.loadIvfIndex(s, dir).assigned.count() == 7L)
     // compaction replay is harmless
     Similarity.compactIvfIndex(s, dir)
@@ -292,7 +292,7 @@ class OperatorsSpec extends SparkSpec {
     val recovered = Similarity.loadIvfIndex(s, dir)
     assert(recovered.assigned.count() == 8L)
     assert(!retired.isDirectory)
-    Similarity.deleteIndexDir(dir)
+    graft.sources.IncrementalIndex.rmTree(dir)
   }
 
   test("Profile.columns: null counting, exact ndv, typed min/max") {
