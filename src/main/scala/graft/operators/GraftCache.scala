@@ -175,8 +175,17 @@ object GraftCache {
   * frees them immediately (the frame becomes UNUSABLE — checkpointed RDDs
   * cannot recompute); [[pin]] marks frames whose blocks are owned by a
   * cache entry (freed on that entry's eviction, not by sweep);
-  * [[sweep]] frees every tracked, unpinned checkpoint — called BETWEEN
-  * queries (Bench/Verify), never mid-query. */
+  * [[sweep]] frees every tracked, unpinned checkpoint — harness-only,
+  * called BETWEEN queries (Bench/Verify), never mid-query, because it
+  * frees every running stream's blocks too.
+  *
+  * Owner scopes: a checkpoint taken while the current thread runs inside
+  * a [[Scope]] (a streaming sink's micro-batch, on the query's own
+  * stream thread) is owned by that scope, and the scope frees its own
+  * blocks one batch later — never another sink's, so two streaming
+  * queries in one session cannot free each other's in-flight frames.
+  * Checkpoints taken outside any scope (batch gates) wait for
+  * [[sweep]]. */
 object Checkpoints {
 
   private val live =
@@ -209,10 +218,36 @@ object Checkpoints {
         "spark.graft.checkpoint.dir", "/tmp/graft-checkpoints"))
   }
 
+  private val current = new ThreadLocal[Scope]
+
   private def track(out: DataFrame): DataFrame = {
-    rddsOf(out).foreach(r =>
-      live.put(r.id, new java.lang.ref.WeakReference[RDD[_]](r)))
+    val scope = current.get
+    rddsOf(out).foreach { r =>
+      live.put(r.id, new java.lang.ref.WeakReference[RDD[_]](r))
+      if (scope != null) scope.own(r.id)
+    }
     out
+  }
+
+  /** The checkpoints one owner (a micro-batch sink instance) takes, freed
+    * with a ONE-BATCH delay: [[batch]] runs its body with this scope as
+    * the thread's current one, then frees the scope's unpinned
+    * checkpoints tracked before that batch began. So the frame a batch
+    * hands its handler stays valid until the end of the NEXT batch; a
+    * handler that keeps a checkpointed frame longer must [[pin]] it.
+    * A frame pinned meanwhile (cache-owned) leaves the scope unfreed. */
+  private[graft] final class Scope {
+    private val ids = scala.collection.mutable.Set.empty[Int]
+    private[Checkpoints] def own(id: Int): Unit = synchronized { ids += id }
+
+    def batch[A](body: => A): A = {
+      val prior = synchronized { val p = ids.toList; ids.clear(); p }
+      val outer = current.get
+      current.set(this)
+      val out = try body finally current.set(outer)
+      prior.foreach(free)
+      out
+    }
   }
 
   /** Eagerly checkpoint `df` (lineage truncation) and track the
@@ -267,39 +302,26 @@ object Checkpoints {
     pinnedIds.remove(r.id)
   }
 
-  /** Free every tracked, unpinned checkpoint, plus the releases of cache
-    * entries evicted since the last sweep. Call between queries. */
+  /** Free every tracked, unpinned checkpoint — every stream's and every
+    * batch query's — plus the releases of cache entries evicted since
+    * the last sweep. Harness-only: call between queries. */
   def sweep(): Unit = {
     GraftCache.drainEvicted()
-    sweepIds(None)
+    live.keySet.forEach(id => free(id))
   }
 
-  /** Ids of the currently tracked checkpoints. Snapshot at micro-batch
-    * start, pass to [[sweepOnly]] at batch end: frees only PRIOR batches'
-    * blocks, so the frame handed to a foreachBatch handler survives one
-    * full batch beyond its own (a handler may defer consumption by a
-    * batch without hitting missing-block failures). */
+  /** Free one tracked checkpoint unless it is pinned (cache-owned). */
+  private def free(id: Int): Unit =
+    if (!pinnedIds.contains(id)) {
+      val ref = live.remove(id)
+      val r = if (ref == null) null else ref.get()
+      if (r != null) { try r.unpersist(false) catch { case _: Throwable => () } }
+    }
+
+  /** Ids of the currently tracked checkpoints (all owners). */
   def liveIds: Set[Int] = {
     import scala.jdk.CollectionConverters._
     live.keySet.asScala.toSet
-  }
-
-  /** Scoped sweep: free only the tracked, unpinned checkpoints in `ids`.
-    * Does NOT drain deferred cache evictions — those may pin frames built
-    * during the current batch; they drain at the next full [[sweep]]. */
-  def sweepOnly(ids: Set[Int]): Unit = sweepIds(Some(ids))
-
-  private def sweepIds(only: Option[Set[Int]]): Unit = {
-    val it = live.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (!pinnedIds.contains(e.getKey) &&
-          only.forall(_.contains(e.getKey))) {
-        val r = e.getValue.get()
-        if (r != null) { try r.unpersist(false) catch { case _: Throwable => () } }
-        it.remove()
-      }
-    }
   }
 
   private[graft] def liveCount: Int = live.size()

@@ -17,7 +17,8 @@ import java.io.{FileNotFoundException, IOException}
   *    move files into the live dir under deterministic
   *    `tag-<batchTag>-` names preserving any partition subdirs (a replay
   *    first sweeps partial moves of the same tag), then write the
-  *    marker. Tag-idempotent; crash-safe in either direction.
+  *    marker and clear the tag's staging dir. Tag-idempotent; crash-safe
+  *    in either direction; appends under different tags may interleave.
   *  - **delete**: tag-scoped tombstone parquet of ids (overwrite mode —
   *    replays rewrite the same path); [[load]] subtracts them with one
   *    broadcast anti-join so deletes are visible without a rewrite.
@@ -246,14 +247,12 @@ object IncrementalIndex {
 
   /** Phase 1 of [[append]]: write the batch under the tag-scoped staging
     * dir and return its path, or None when the tag already committed.
-    * Callers that derive a SECOND index from the same rows (e.g. the
-    * text vocab sidecar from its postings) read the staged parquet back
-    * instead of recomputing the batch transform — one pass over the
-    * expensive job, two sinks — then [[commitStaged]] finishes the move.
-    * Nothing is visible to [[load]] until commit; an uncommitted staging
-    * dir is swept by the next append's replay or [[drop]]. */
-  def stage(spark: SparkSession, s: Spec, rows: DataFrame,
-            batchTag: String): Option[String] = {
+    * Nothing is visible to [[load]] until commit. An uncommitted staging
+    * dir is rewritten by its own tag's replay and cleared by that
+    * commit, by [[drop]] or by [[rebuild]]; other tags' commits leave
+    * it alone, so concurrent writers of one index keep their rows. */
+  private[graft] def stage(spark: SparkSession, s: Spec, rows: DataFrame,
+                           batchTag: String): Option[String] = {
     recover(s)
     if (hasTag(s, batchTag)) return None
     migrateLegacy(spark, s)
@@ -264,8 +263,9 @@ object IncrementalIndex {
 
   /** Phase 2 of [[append]]: move the staged parquet files into the live
     * dir under deterministic `tag-` names (sweeping any partial prior
-    * move of the same tag first), write the marker, clear staging. */
-  def commitStaged(s: Spec, batchTag: String): Unit = {
+    * move of the same tag first), write the marker, clear the tag's
+    * staging dir. */
+  private[graft] def commitStaged(s: Spec, batchTag: String): Unit = {
     val live = new Path(s.liveDir)
     val fs = fsOf(live)
     fs.mkdirs(live)
@@ -292,7 +292,7 @@ object IncrementalIndex {
         rename(fs, src, new Path(dst, prefix + src.getName))
       }
     writeMarker(s, batchTag)
-    rmTree(s.stagingRoot)
+    rmTree(staging.toString)
   }
 
   /** Tombstone ids (tag-idempotent; visible at [[load]]; physical at

@@ -41,17 +41,29 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * allows: `FileSystem.rename` may refuse an existing target (with Hive's
   * jars on the classpath, as in the Spark build this engine uses, `file:`
   * is served by Hive's `ProxyLocalFileSystem`, which does), and then the
-  * existing file is kept and the temp file is left beside it. Only the
-  * state store asks to overwrite, and it rewrites a version only when a
-  * batch or task re-runs on the same input. Spark's own checkpoint
-  * checksum files wrap this manager and stay on. */
+  * existing file is kept and the local delegate deletes the temp file
+  * (with its checksum sidecar), where Spark's manager would leave both
+  * beside it. Only the state store asks to overwrite, and it rewrites a
+  * version only when a batch or task re-runs on the same input. Spark's
+  * own checkpoint checksum files wrap this manager and stay on. */
 class GraftCheckpointFileManager(path: Path, hadoopConf: Configuration)
   extends CheckpointFileManager {
   import GraftCheckpointFileManager._
 
   val delegate: CheckpointFileManager =
     if (isLocalScheme(scheme(path, hadoopConf)))
-      new FileSystemBasedCheckpointFileManager(path, hadoopConf)
+      new FileSystemBasedCheckpointFileManager(path, hadoopConf) {
+        // an overwrite the filesystem refuses keeps the destination:
+        // drop the temp file; any other failed rename goes to Spark's
+        // own handling, which retries it and raises the matching error
+        override def renameTempFile(src: Path, dst: Path,
+                                    overwriteIfPossible: Boolean): Unit =
+          if (!overwriteIfPossible) super.renameTempFile(src, dst, false)
+          else if (!fs.rename(src, dst)) {
+            if (fs.exists(dst)) fs.delete(src, false)
+            else super.renameTempFile(src, dst, true)
+          }
+      }
     else {
       // Spark's own choice, made on a copy that does not name this class
       val sparkDefault = new Configuration(hadoopConf)

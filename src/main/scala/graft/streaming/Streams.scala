@@ -3,7 +3,8 @@ package graft.streaming
 import graft.functions.Scalars
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout}
 
 /** Structured-Streaming realization of the reference's realtime-ingestion
   * semantics (SURVEY §2.9).
@@ -20,6 +21,32 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * `dropDuplicates` within watermark. All stateful ops are keyed → state is
   * hash-partitioned across executors; watermarks bound state size, which is
   * what makes the operators viable on an unbounded 100 TB/day stream.
+  *
+  * Sink contract. Every `*Sink` here is a body over one private
+  * skeleton, `microBatchSink` — the reference's one consuming-segment
+  * loop (consume, index at ingest, seal) whatever indexes the table
+  * has — and the sink contract (Structured Streaming's epoch-id
+  * idempotent sink) holds for all of them:
+  *  - **Tag.** A sink instance is named by its `streamTag`, or by a
+  *    fresh tag per instance when none is given. Micro-batch N commits
+  *    to its index under `<instance>_N` (a sink that appends to several
+  *    indexes per batch, like [[frontierSink]], uses
+  *    `<instance>_<part>_N`). Pass something stable across restarts of
+  *    the SAME logical stream — the checkpoint location is the natural
+  *    choice — to keep idempotency across a crash-recovery replay; the
+  *    default covers in-run retries and treats each new query as new
+  *    data (batchIds restart at 0 per query).
+  *  - **Replay.** Under Spark's at-least-once micro-batch retries, a
+  *    tagged sink's replayed batch finds its tag committed and appends
+  *    nothing, so retries cannot double-index; the untagged sinks are
+  *    stateless or keep their own replay state (see each).
+  *  - **Handler delay.** The checkpoints a batch takes belong to its
+  *    sink instance (a `Checkpoints.Scope`) and free at the end of the
+  *    NEXT batch of that instance, never another sink's: the frame
+  *    handed to `handler` stays valid for one batch beyond its own, so
+  *    a handler may defer consumption (async writer, short-lived cache)
+  *    by one batch; one that keeps it longer must `Checkpoints.pin` it.
+  *    Any number of sinks may run in one session.
   */
 object Streams {
   /** Kafka partition-level source (reference: `PartitionLevelConsumer` /
@@ -88,11 +115,40 @@ object Streams {
     * appends a columnar file set, checkpointed for exactly-once. */
   def parquetSink(df: DataFrame, path: String, checkpoint: String,
                   triggerSec: Long = 60)
-  : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+  : DataStreamWriter[Row] =
     df.writeStream.format("parquet")
       .option("path", path).option("checkpointLocation", checkpoint)
       .trigger(org.apache.spark.sql.streaming.Trigger
         .ProcessingTime(triggerSec * 1000))
+
+  /** Tag of one micro-batch of one sink instance. */
+  private final case class BatchTag(instance: String, batchId: Long) {
+    /** `<instance>_<batchId>`: the tag a sink commits its batch under. */
+    def name: String = s"${instance}_$batchId"
+    /** `<instance>_<part>_<batchId>`: one of several indexes one batch
+      * appends to. */
+    def part(p: String): String = s"${instance}_${p}_$batchId"
+  }
+
+  private val sinkCounter = new java.util.concurrent.atomic.AtomicLong()
+  private def freshStreamTag(): String =
+    s"sink_${System.nanoTime()}_${sinkCounter.incrementAndGet()}"
+
+  /** The one micro-batch sink skeleton (the sink contract in the
+    * [[Streams]] header): names the instance, runs `body` then
+    * `handler` per batch inside the instance's checkpoint scope. No
+    * sink registers its own batch function. */
+  private def microBatchSink(df: DataFrame,
+                             streamTag: Option[String] = None)
+                            (body: (DataFrame, Long, BatchTag) => DataFrame)
+                            (handler: DataFrame => Unit)
+  : DataStreamWriter[Row] = {
+    val instance = streamTag.getOrElse(freshStreamTag())
+    val scope = new graft.operators.Checkpoints.Scope
+    df.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      scope.batch(handler(body(batch, batchId, BatchTag(instance, batchId))))
+    }
+  }
 
   /** Streaming NEAR-dup dedup: each micro-batch runs the incremental
     * MinHash protocol against the persisted band-bucketed signature index
@@ -102,44 +158,21 @@ object Streams {
     * index TABLE, not executor memory — it survives restarts and is
     * shared with any batch ingestion writing the same index, which is
     * how a realtime + offline pipeline stays mutually deduplicated.
-    *
-    * Idempotent under foreachBatch's at-least-once retry semantics: each
-    * micro-batch's index rows carry a `(streamTag, batchId)` tag, so a
-    * REPLAYED micro-batch probes the index minus its own prior survivors
-    * (not against them — which would silently drop the whole batch) and
-    * the append is skipped when the tag is already indexed; the handler
-    * sees identical rows on every retry. `streamTag` scopes batchIds
-    * (which restart at 0 per query): pass something stable across
-    * restarts of the SAME logical stream — the checkpoint location is
-    * the natural choice — to keep idempotency across a crash-recovery
-    * replay; the default (a fresh tag per sink instance) covers in-run
-    * retries and treats each new query as new data. Orphaned checkpoint
-    * blocks are swept with a ONE-BATCH delay: each batch frees only prior
-    * batches' blocks, so the frame handed to `handler` stays valid until
-    * the next micro-batch — handlers may defer consumption by one batch
-    * (beyond that the blocks are gone and the frame cannot recompute). */
+    * A REPLAYED micro-batch probes the index minus its own prior
+    * survivors (not against them — which would silently drop the whole
+    * batch), so the handler sees identical rows on every retry. */
   def nearDedupSink(docs: DataFrame, textCol: String, idCol: String,
                     indexName: String, minAgree: Double = 1.0,
                     k: Int = 3, bands: Int = 4, rowsPerBand: Int = 2,
                     streamTag: Option[String] = None,
                     prefixWidth: Int = 1)
-                   (handler: DataFrame => Unit)
-  : org.apache.spark.sql.streaming.DataStreamWriter[Row] = {
-    val instance = streamTag.getOrElse(freshStreamTag())
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      // snapshot BEFORE this batch's protocol runs: the scoped sweep below
-      // frees only prior batches' checkpoint blocks, so the frame handed to
-      // `handler` stays valid until the NEXT micro-batch — a handler may
-      // defer consumption (async writer, short-lived cache) by one batch.
-      val prior = graft.operators.Checkpoints.liveIds
-      handler(graft.operators.Dedup.incrementalMinHash(
+                   (handler: DataFrame => Unit): DataStreamWriter[Row] =
+    microBatchSink(docs, streamTag) { (batch, _, tag) =>
+      graft.operators.Dedup.incrementalMinHash(
         batch.sparkSession, batch, textCol, idCol, indexName,
-        k, bands, rowsPerBand, minAgree,
-        batchTag = Some(s"${instance}_$batchId"),
-        prefixWidth = prefixWidth))
-      graft.operators.Checkpoints.sweepOnly(prior)
-    }
-  }
+        k, bands, rowsPerBand, minAgree, batchTag = Some(tag.name),
+        prefixWidth = prefixWidth)
+    }(handler)
 
   /** Streaming bloom dedup (the Dolma-BFF twin of [[exactDedupSink]]):
     * dedup state is m BITS held on the driver — constant regardless of
@@ -155,12 +188,11 @@ object Streams {
     * one distinct over the survivors' probe positions. */
   def bloomDedupSink(docs: DataFrame, keyCol: String, mBits: Int = 1 << 20,
                      seeds: Int = 3)
-                    (handler: DataFrame => Unit)
-  : org.apache.spark.sql.streaming.DataStreamWriter[Row] = {
+                    (handler: DataFrame => Unit): DataStreamWriter[Row] = {
     val state = new BloomDedupState(keyCol, mBits, seeds)
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      handler(state.process(batch, batchId))
-    }
+    microBatchSink(docs) { (batch, batchId, _) =>
+      state.process(batch, batchId)
+    }(handler)
   }
 
   /** Driver-held state of [[bloomDedupSink]], factored out so the
@@ -241,8 +273,7 @@ object Streams {
   def paragraphDedupSink(docs: DataFrame, textCol: String, idCol: String,
                          mBits: Int = 1 << 20, seeds: Int = 3,
                          sep: String = "\n")
-                        (handler: DataFrame => Unit)
-  : org.apache.spark.sql.streaming.DataStreamWriter[Row] =
+                        (handler: DataFrame => Unit): DataStreamWriter[Row] =
     paragraphDedupSinkWith(new BloomDedupState("para", mBits, seeds),
       docs, textCol, idCol, sep)(handler)
 
@@ -254,11 +285,10 @@ object Streams {
                                             textCol: String, idCol: String,
                                             sep: String)
                                            (handler: DataFrame => Unit)
-  : org.apache.spark.sql.streaming.DataStreamWriter[Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      handler(paragraphDedupBatch(state, batch, batchId, textCol, idCol,
-        sep))
-    }
+  : DataStreamWriter[Row] =
+    microBatchSink(docs) { (batch, batchId, _) =>
+      paragraphDedupBatch(state, batch, batchId, textCol, idCol, sep)
+    }(handler)
 
   /** One micro-batch of [[paragraphDedupSink]], factored out so the
     * protocol is unit-testable (the [[BloomDedupState]] pattern). */
@@ -288,30 +318,19 @@ object Streams {
   /** Streaming EXACT dedup against the persisted content-hash index —
     * the continuous-crawl twin of [[nearDedupSink]] over
     * [[graft.operators.Dedup.incrementalExact]]: unbounded horizon (index
-    * table, not executor state), the same `(streamTag, batchId)`
-    * idempotency contract, shared with batch ingestion on the same
+    * table, not executor state), shared with batch ingestion on the same
     * index. `prefixWidth` passes through to the index layout knob (an
     * existing index's on-disk width wins — see Dedup.persistedPrefixWidth). */
   def exactDedupSink(docs: DataFrame, textCol: String, idCol: String,
                      indexName: String,
                      streamTag: Option[String] = None,
                      prefixWidth: Int = 1)
-                    (handler: DataFrame => Unit)
-  : org.apache.spark.sql.streaming.DataStreamWriter[Row] = {
-    val instance = streamTag.getOrElse(freshStreamTag())
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val prior = graft.operators.Checkpoints.liveIds // see nearDedupSink
-      handler(graft.operators.Dedup.incrementalExact(
+                    (handler: DataFrame => Unit): DataStreamWriter[Row] =
+    microBatchSink(docs, streamTag) { (batch, _, tag) =>
+      graft.operators.Dedup.incrementalExact(
         batch.sparkSession, batch, textCol, idCol, indexName,
-        batchTag = Some(s"${instance}_$batchId"),
-        prefixWidth = prefixWidth))
-      graft.operators.Checkpoints.sweepOnly(prior)
-    }
-  }
-
-  private val sinkCounter = new java.util.concurrent.atomic.AtomicLong()
-  private def freshStreamTag(): String =
-    s"sink_${System.nanoTime()}_${sinkCounter.incrementAndGet()}"
+        batchTag = Some(tag.name), prefixWidth = prefixWidth)
+    }(handler)
 
   /** Streaming DECONTAMINATION gate — "never train on eval" enforced
     * AT INGEST: each micro-batch drops documents sharing a k-shingle
@@ -329,13 +348,11 @@ object Streams {
     * `handler`. */
   def decontamSink(docs: DataFrame, textCol: String, idCol: String,
                    benchSh: DataFrame, k: Int)
-                  (handler: DataFrame => Unit)
-  : org.apache.spark.sql.streaming.DataStreamWriter[Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val flagged = graft.operators.Decontaminate.flaggedWith(
-        batch, textCol, idCol, benchSh, k)
-      handler(batch.join(flagged, Seq(idCol), "left_anti"))
-    }
+                  (handler: DataFrame => Unit): DataStreamWriter[Row] =
+    microBatchSink(docs) { (batch, _, _) =>
+      batch.join(graft.operators.Decontaminate.flaggedWith(
+        batch, textCol, idCol, benchSh, k), Seq(idCol), "left_anti")
+    }(handler)
 
   /** Streaming TEXT-index maintenance — the reference's realtime text
     * indexing (mutable segments index text AT INGEST —
@@ -344,26 +361,20 @@ object Streams {
     * over data seconds old). Each micro-batch appends its postings to
     * the persisted tp-partitioned index through the tag-idempotent
     * [[graft.sources.TextIndexLifecycle]] protocol: O(batch), one
-    * tokenize job + one partitioned write, never a corpus re-index; a
-    * replayed micro-batch no-ops on its `(streamTag, batchId)` marker,
-    * so at-least-once retries cannot double-index. The batch rows pass
-    * through to `handler` unchanged — index maintenance is a side
-    * effect of ingest, exactly the reference's shape — and the index is
-    * shared with batch ingestion on the same root (the hybrid
-    * realtime + offline story). The term dictionary stays lazy (folds
-    * at `loadVocab`), so this hot path pays nothing for it.
-    * `streamTag` contract as in [[nearDedupSink]]. */
+    * tokenize job + one partitioned write, never a corpus re-index. The
+    * batch rows pass through to `handler` unchanged — index maintenance
+    * is a side effect of ingest, exactly the reference's shape — and
+    * the index is shared with batch ingestion on the same root (the
+    * hybrid realtime + offline story). The term dictionary stays lazy
+    * (folds at `loadVocab`), so this hot path pays nothing for it. */
   def textIndexSink(docs: DataFrame, textCol: String, idCol: String,
                     indexRoot: String, streamTag: Option[String] = None)
-                   (handler: DataFrame => Unit)
-  : org.apache.spark.sql.streaming.DataStreamWriter[Row] = {
-    val instance = streamTag.getOrElse(freshStreamTag())
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+                   (handler: DataFrame => Unit): DataStreamWriter[Row] =
+    microBatchSink(docs, streamTag) { (batch, _, tag) =>
       graft.sources.TextIndexLifecycle.append(batch.sparkSession,
-        indexRoot, textCol, idCol, batch, s"${instance}_$batchId")
-      handler(batch)
-    }
-  }
+        indexRoot, textCol, idCol, batch, tag.name)
+      batch
+    }(handler)
 
   /** Streaming LINK-GRAPH maintenance — the crawl's edge set
     * accumulates per micro-batch: each batch of fetched pages extracts
@@ -373,20 +384,17 @@ object Streams {
     * accumulated index is never read on the ingest path);
     * [[graft.operators.LinkGraph.loadEdges]] +
     * [[graft.operators.LinkGraph.pageRankWarm]] are the periodic
-    * re-rank over everything absorbed so far. Same contract as
-    * [[textIndexSink]]: tag-idempotent replays, batch passed through,
-    * index shared with batch writers on the same name. */
+    * re-rank over everything absorbed so far. Same shape as
+    * [[textIndexSink]]: batch passed through, index shared with batch
+    * writers on the same name. */
   def linkGraphSink(pages: DataFrame, uriCol: String, htmlCol: String,
                     indexName: String, streamTag: Option[String] = None)
-                   (handler: DataFrame => Unit)
-  : org.apache.spark.sql.streaming.DataStreamWriter[Row] = {
-    val instance = streamTag.getOrElse(freshStreamTag())
-    pages.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+                   (handler: DataFrame => Unit): DataStreamWriter[Row] =
+    microBatchSink(pages, streamTag) { (batch, _, tag) =>
       graft.operators.LinkGraph.appendEdges(batch.sparkSession, batch,
-        uriCol, htmlCol, indexName, s"${instance}_$batchId")
-      handler(batch)
-    }
-  }
+        uriCol, htmlCol, indexName, tag.name)
+      batch
+    }(handler)
 
   /** Streaming frontier maintenance — the state of the continuous-crawl
     * LOOP: each micro-batch of fetched pages appends (a) its own uris
@@ -394,17 +402,16 @@ object Streams {
     * DISCOVERED ledger (a fetched url was by definition discovered —
     * this is what retires it from pending), and (b) every absolute
     * anchor href it contains as link sightings. Both appends are
-    * O(batch) and tag-idempotent; [[graft.operators.Frontier.pending]]
+    * O(batch) and tag-idempotent, under the batch's `d` and `f` part
+    * tags; [[graft.operators.Frontier.pending]]
     * (discovered ∖ fetched, provenance OR-folded) then feeds
     * Robots.frontierFilter/schedule for the NEXT fetch round — the
     * sitemap channel appends through
     * [[graft.operators.Frontier.appendDiscovered]] on its own tags. */
   def frontierSink(pages: DataFrame, uriCol: String, htmlCol: String,
                    frontierName: String, streamTag: Option[String] = None)
-                  (handler: DataFrame => Unit)
-  : org.apache.spark.sql.streaming.DataStreamWriter[Row] = {
-    val instance = streamTag.getOrElse(freshStreamTag())
-    pages.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+                  (handler: DataFrame => Unit): DataStreamWriter[Row] =
+    microBatchSink(pages, streamTag) { (batch, _, tag) =>
       val s = batch.sparkSession
       val self = batch.select(col(uriCol).as("url"),
         lit(false).as("from_sitemap"), lit(false).as("from_link"))
@@ -414,14 +421,11 @@ object Streams {
         .select(col("url"), lit(false).as("from_sitemap"),
           lit(true).as("from_link"))
       graft.operators.Frontier.appendDiscovered(s,
-        self.unionByName(links), "url", frontierName,
-        s"${instance}_d_$batchId")
+        self.unionByName(links), "url", frontierName, tag.part("d"))
       graft.operators.Frontier.appendFetched(s,
-        batch.select(col(uriCol)), uriCol, frontierName,
-        s"${instance}_f_$batchId")
-      handler(batch)
-    }
-  }
+        batch.select(col(uriCol)), uriCol, frontierName, tag.part("f"))
+      batch
+    }(handler)
 
   /** Streaming CONDITIONAL-REVISIT ingest — the refresh fetcher's
     * output as a micro-batch stream: each batch mixes body-less 304
@@ -432,46 +436,37 @@ object Streams {
     * reach `handler` (the downstream curation feed). The ledger seq is
     * `seqBase + batchId`; compose with earlier batch rounds by passing
     * a `seqBase` above their seqs (the ledger's latest-wins fold is
-    * seq-ordered). Tag-idempotent: an at-least-once replayed
-    * micro-batch appends nothing and hands `handler` an empty frame.
-    * Checkpoint discipline as [[exactDedupSink]] — only PRIOR batches'
-    * scratch checkpoints free at batch end. */
+    * seq-ordered). A replayed micro-batch appends nothing and hands
+    * `handler` an empty frame. */
   def conditionalRevisitSink(fetches: DataFrame, urlCol: String,
                              contentCol: String, statusCol: String,
                              etagCol: String, lastModifiedCol: String,
                              frontierName: String, seqBase: Long = 0L,
                              streamTag: Option[String] = None)
                             (handler: DataFrame => Unit)
-  : org.apache.spark.sql.streaming.DataStreamWriter[Row] = {
-    val instance = streamTag.getOrElse(freshStreamTag())
-    fetches.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val prior = graft.operators.Checkpoints.liveIds
-      handler(graft.operators.Frontier.changedOnlyConditional(
+  : DataStreamWriter[Row] =
+    microBatchSink(fetches, streamTag) { (batch, batchId, tag) =>
+      graft.operators.Frontier.changedOnlyConditional(
         batch.sparkSession, batch, urlCol, contentCol, statusCol,
         etagCol, lastModifiedCol, frontierName, seqBase + batchId,
-        s"${instance}_$batchId"))
-      graft.operators.Checkpoints.sweepOnly(prior)
-    }
-  }
+        tag.name)
+    }(handler)
 
   /** Streaming JSON-index maintenance — the realtime twin of the json
     * posting table (`MutableJsonIndexImpl`: the reference builds the
-    * json index inside consuming segments too). Same contract as
+    * json index inside consuming segments too). Same shape as
     * [[textIndexSink]]: per-batch O(batch) flatten + path-partitioned
-    * append, tag-idempotent replays, batch passed through, index shared
-    * with batch lifecycle writers on the same root. */
+    * append, batch passed through, index shared with batch lifecycle
+    * writers on the same root. */
   def jsonIndexSink(docs: DataFrame, jsonCol: String, idCol: String,
                     schema: org.apache.spark.sql.types.StructType,
                     indexRoot: String, streamTag: Option[String] = None)
-                   (handler: DataFrame => Unit)
-  : org.apache.spark.sql.streaming.DataStreamWriter[Row] = {
-    val instance = streamTag.getOrElse(freshStreamTag())
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+                   (handler: DataFrame => Unit): DataStreamWriter[Row] =
+    microBatchSink(docs, streamTag) { (batch, _, tag) =>
       graft.sources.JsonIndexLifecycle.append(batch.sparkSession,
-        indexRoot, jsonCol, idCol, schema, batch, s"${instance}_$batchId")
-      handler(batch)
-    }
-  }
+        indexRoot, jsonCol, idCol, schema, batch, tag.name)
+      batch
+    }(handler)
 
   /** Streaming SFT ingest — the post-training twin of the curation
     * sinks: a live feed of raw chat logs (exports, annotation-tool
@@ -486,16 +481,11 @@ object Streams {
     * `handler`. */
   def sftIngestSink(chats: DataFrame, jsonCol: String, idCol: String,
                     corpusName: String, streamTag: Option[String] = None)
-                   (handler: DataFrame => Unit)
-  : org.apache.spark.sql.streaming.DataStreamWriter[Row] = {
-    val instance = streamTag.getOrElse(freshStreamTag())
-    chats.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val prior = graft.operators.Checkpoints.liveIds
-      handler(graft.operators.Chats.ingestSft(batch.sparkSession, batch,
-        jsonCol, idCol, corpusName, s"${instance}_$batchId"))
-      graft.operators.Checkpoints.sweepOnly(prior)
-    }
-  }
+                   (handler: DataFrame => Unit): DataStreamWriter[Row] =
+    microBatchSink(chats, streamTag) { (batch, _, tag) =>
+      graft.operators.Chats.ingestSft(batch.sparkSession, batch,
+        jsonCol, idCol, corpusName, tag.name)
+    }(handler)
 
   /** [[sftIngestSink]] for TOOL-CALL traces — the continuous twin of
     * the agentic-trace pack path
@@ -507,16 +497,11 @@ object Streams {
     * `handler`. */
   def toolIngestSink(chats: DataFrame, jsonCol: String, idCol: String,
                      corpusName: String, streamTag: Option[String] = None)
-                    (handler: DataFrame => Unit)
-  : org.apache.spark.sql.streaming.DataStreamWriter[Row] = {
-    val instance = streamTag.getOrElse(freshStreamTag())
-    chats.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val prior = graft.operators.Checkpoints.liveIds
-      handler(graft.operators.Chats.ingestToolSft(batch.sparkSession,
-        batch, jsonCol, idCol, corpusName, s"${instance}_$batchId"))
-      graft.operators.Checkpoints.sweepOnly(prior)
-    }
-  }
+                    (handler: DataFrame => Unit): DataStreamWriter[Row] =
+    microBatchSink(chats, streamTag) { (batch, _, tag) =>
+      graft.operators.Chats.ingestToolSft(batch.sparkSession,
+        batch, jsonCol, idCol, corpusName, tag.name)
+    }(handler)
 
   /** Streaming protocol-TRIAGE monitoring — the continuous twin of
     * [[graft.operators.Chats.toolTriageCard]]: each micro-batch of a
@@ -528,16 +513,12 @@ object Streams {
     * BATCH only; nothing accumulates. The card (with `batch_id`)
     * passes to `handler`. */
   def toolTriageSink(chats: DataFrame, jsonCol: String, idCol: String)
-                    (handler: DataFrame => Unit)
-  : org.apache.spark.sql.streaming.DataStreamWriter[Row] =
-    chats.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val prior = graft.operators.Checkpoints.liveIds
-      handler(graft.operators.Chats.toolTriageCard(
-          graft.operators.Chats.toolTurns(batch, jsonCol, idCol),
-          idCol)
-        .withColumn("batch_id", lit(batchId)))
-      graft.operators.Checkpoints.sweepOnly(prior)
-    }
+                    (handler: DataFrame => Unit): DataStreamWriter[Row] =
+    microBatchSink(chats) { (batch, batchId, _) =>
+      graft.operators.Chats.toolTriageCard(
+          graft.operators.Chats.toolTurns(batch, jsonCol, idCol), idCol)
+        .withColumn("batch_id", lit(batchId))
+    }(handler)
 
   /** Streaming DRIFT monitoring — the continuous twin of
     * [[graft.operators.Curation.unigramDrift]]: each micro-batch of a
@@ -555,12 +536,11 @@ object Streams {
     * [[driftSinkCounts]] directly. */
   def driftSink(docs: DataFrame, textCol: String,
                 reference: DataFrame, refTextCol: String)
-               (handler: DataFrame => Unit)
-  : org.apache.spark.sql.streaming.DataStreamWriter[Row] = {
+               (handler: DataFrame => Unit): DataStreamWriter[Row] = {
     // the reference vocabulary is CACHE-OWNED (pinned, eviction-
-    // released — the Dedup.cached idiom): the per-batch sweepOnly
-    // must skip it, and re-opening a sink over the same reference
-    // frame reuses the counts instead of re-tokenizing
+    // released — the Dedup.cached idiom): sweep() must skip it, and
+    // re-opening a sink over the same reference frame reuses the counts
+    // instead of re-tokenizing
     val key = (System.identityHashCode(reference.sparkSession),
       s"driftRef:$refTextCol:" +
         s"${reference.queryExecution.analyzed.semanticHash()}")
@@ -584,16 +564,16 @@ object Streams {
     * — so an exporter that drops a required key or flips an argument
     * type pages the pipeline the batch it breaks. The reference
     * corpus infers ONCE at sink construction (cache-owned + pinned,
-    * the [[driftSink]] idiom — per-batch sweeps skip it, re-opening
-    * a sink over the same reference reuses the frame); per batch the
-    * cost is the batch's own inference + a contract-vocabulary-sized
-    * compare. The card (with `batch_id`) passes to `handler`. */
+    * the [[driftSink]] idiom — re-opening a sink over the same
+    * reference reuses the frame); per batch the cost is the batch's
+    * own inference + a contract-vocabulary-sized compare. The card
+    * (with `batch_id`) passes to `handler`. */
   def contractDriftSink(chats: DataFrame, jsonCol: String,
                         idCol: String, reference: DataFrame,
                         refJsonCol: String, refIdCol: String,
                         minPresence: Double = 0.95)
                        (handler: DataFrame => Unit)
-  : org.apache.spark.sql.streaming.DataStreamWriter[Row] = {
+  : DataStreamWriter[Row] = {
     val key = (System.identityHashCode(reference.sparkSession),
       s"contractRef:$refJsonCol:$refIdCol:$minPresence:" +
         s"${reference.queryExecution.analyzed.semanticHash()}")
@@ -613,29 +593,20 @@ object Streams {
   /** [[contractDriftSink]] against an ALREADY-INFERRED reference
     * contract frame ([[graft.operators.Chats.toolContractInfer]]
     * shape) — the monitoring-loop entry point when the training-set
-    * contracts are persisted next to the model. The reference is
-    * PINNED defensively: a caller-checkpointed (eager, unpinned)
-    * frame would otherwise sit in batch 0's `prior` snapshot and be
-    * FREED by the per-batch sweep — the exact
-    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND class driftSink fixed in r18
-    * (pin is idempotent and a no-op on plain frames). */
+    * contracts are persisted next to the model. */
   def contractDriftSinkInferred(chats: DataFrame, jsonCol: String,
                                 idCol: String, refInf: DataFrame,
                                 minPresence: Double = 0.95)
                                (handler: DataFrame => Unit)
-  : org.apache.spark.sql.streaming.DataStreamWriter[Row] = {
-    graft.operators.Checkpoints.pin(refInf)
-    chats.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val prior = graft.operators.Checkpoints.liveIds
-      handler(graft.operators.Chats.contractDriftCard(
+  : DataStreamWriter[Row] =
+    microBatchSink(chats) { (batch, batchId, _) =>
+      graft.operators.Chats.contractDriftCard(
           graft.operators.Chats.contractDrift(refInf,
             graft.operators.Chats.toolContractInfer(
               graft.operators.Chats.toolTurns(batch, jsonCol, idCol),
               idCol, minPresence)))
-        .withColumn("batch_id", lit(batchId)))
-      graft.operators.Checkpoints.sweepOnly(prior)
-    }
-  }
+        .withColumn("batch_id", lit(batchId))
+    }(handler)
 
   /** [[driftSink]] against a PRECOMPUTED (token, cnt) reference frame
     * ([[graft.operators.Curation.unigramCounts]] shape) — the
@@ -644,22 +615,12 @@ object Streams {
     * batch's tokens, one vocabulary-sized join, one report agg. */
   def driftSinkCounts(docs: DataFrame, textCol: String,
                       refCounts: DataFrame)
-                     (handler: DataFrame => Unit)
-  : org.apache.spark.sql.streaming.DataStreamWriter[Row] = {
-    // defensively pin a caller-checkpointed reference (idempotent;
-    // no-op for plain frames) — an eager-unpinned frame would be in
-    // batch 0's snapshot and freed by the per-batch sweep (the
-    // contractDriftSinkInferred sharp edge, r19 review)
-    graft.operators.Checkpoints.pin(refCounts)
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val prior = graft.operators.Checkpoints.liveIds
-      handler(graft.operators.Curation.unigramDriftFromCounts(
-          graft.operators.Curation.unigramCounts(batch, textCol),
-          refCounts)
-        .withColumn("batch_id", lit(batchId)))
-      graft.operators.Checkpoints.sweepOnly(prior)
-    }
-  }
+                     (handler: DataFrame => Unit): DataStreamWriter[Row] =
+    microBatchSink(docs) { (batch, batchId, _) =>
+      graft.operators.Curation.unigramDriftFromCounts(
+          graft.operators.Curation.unigramCounts(batch, textCol), refCounts)
+        .withColumn("batch_id", lit(batchId))
+    }(handler)
 
   /** Streaming MANIFEST maintenance — continuous attestation for a
     * continuously-ingested corpus: each micro-batch appends its
@@ -674,17 +635,11 @@ object Streams {
   def manifestSink(docs: DataFrame, shardCol: String, idCol: String,
                    textCol: String, name: String,
                    streamTag: Option[String] = None)
-                  (handler: DataFrame => Unit)
-  : org.apache.spark.sql.streaming.DataStreamWriter[Row] = {
-    val instance = streamTag.getOrElse(freshStreamTag())
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val prior = graft.operators.Checkpoints.liveIds
-      handler(graft.operators.Packing.ingestManifest(
-        batch.sparkSession, batch, shardCol, idCol, textCol, name,
-        s"${instance}_$batchId"))
-      graft.operators.Checkpoints.sweepOnly(prior)
-    }
-  }
+                  (handler: DataFrame => Unit): DataStreamWriter[Row] =
+    microBatchSink(docs, streamTag) { (batch, _, tag) =>
+      graft.operators.Packing.ingestManifest(batch.sparkSession, batch,
+        shardCol, idCol, textCol, name, tag.name)
+    }(handler)
 
   /** Streaming VECTOR-index maintenance — the realtime tier of the ANN
     * lifecycle (upstream Pinot's mutable vector index assigns consuming
@@ -694,23 +649,18 @@ object Streams {
     * ([[graft.operators.Similarity.persistIvfIndex]]); each micro-batch
     * assigns its vectors to their nearest cell against the (tiny)
     * broadcast centroid frame and appends cell-partitioned —
-    * O(batch·nCells) dots, the indexed corpus is never re-read, and a
-    * replayed micro-batch no-ops on its `(streamTag, batchId)` marker.
+    * O(batch·nCells) dots, and the indexed corpus is never re-read.
     * Batch passes through to `handler`; probes
     * ([[graft.operators.Similarity.ivfTopKWith]] over `loadIvfIndex`)
-    * see streamed rows immediately. `streamTag` contract as in
-    * [[nearDedupSink]]. */
+    * see streamed rows immediately. */
   def vectorIndexSink(vecs: DataFrame, vecCol: String, idCol: String,
                       indexDir: String, streamTag: Option[String] = None)
-                     (handler: DataFrame => Unit)
-  : org.apache.spark.sql.streaming.DataStreamWriter[Row] = {
-    val instance = streamTag.getOrElse(freshStreamTag())
-    vecs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+                     (handler: DataFrame => Unit): DataStreamWriter[Row] =
+    microBatchSink(vecs, streamTag) { (batch, _, tag) =>
       graft.operators.Similarity.appendIvfIndex(batch.sparkSession,
-        indexDir, batch, idCol, vecCol, s"${instance}_$batchId")
-      handler(batch)
-    }
-  }
+        indexDir, batch, idCol, vecCol, tag.name)
+      batch
+    }(handler)
 
   /** Ingestion-time rollup: per (keys, bucket) count/sum/min/max, the
     * streaming twin of OlapQueries.q_rollup_ingest. `withWatermark` bounds

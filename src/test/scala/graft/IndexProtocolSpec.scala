@@ -253,6 +253,25 @@ class IndexProtocolSpec extends SparkSpec {
     try k.rows(root) ++ vocab finally IncrementalIndex.rmTree(root)
   }
 
+  test("two appends staged on one index both commit: a commit clears " +
+    "only its own tag's staging dir") {
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("idxstage2").toString
+    val sp = IncrementalIndex.Spec(root, "idx", None)
+    assert(IncrementalIndex.stage(s, sp, Seq(1L -> "a").toDF("id", "v"),
+      "A").isDefined)
+    assert(IncrementalIndex.stage(s, sp, Seq(2L -> "b").toDF("id", "v"),
+      "B").isDefined)
+    IncrementalIndex.commitStaged(sp, "A")
+    IncrementalIndex.commitStaged(sp, "B")
+    assert(sorted(IncrementalIndex.load(s, sp, "id")) == Seq("[1,a]", "[2,b]"))
+    assert(IncrementalIndex.tags(sp) == Set("A", "B"))
+    assert(!Files.exists(Paths.get(sp.stagingRoot, "A")) &&
+      !Files.exists(Paths.get(sp.stagingRoot, "B")))
+    IncrementalIndex.rmTree(root)
+  }
+
   test("URI roots: the text, json and IVF lifecycles on file:// and a " +
     "non-local scheme equal the plain-path run") {
     val conf = spark.sparkContext.hadoopConfiguration

@@ -173,6 +173,18 @@ class StreamingSpec extends SparkSpec {
     // whether the file is replaced is up to the FileSystem's rename
     write(overwrite = true, "third")
     assert(Set("first", "third")(read()))
+    // a state-store style overwrite leaves one committed file, and no
+    // temp file or its checksum beside it
+    val sub = new Path(s"file:$dir/state")
+    val delta = new Path(sub, "1.delta")
+    for (text <- Seq("v1", "v2")) {
+      val out = fm.createAtomic(delta, overwriteIfPossible = true)
+      out.write(text.getBytes("UTF-8"))
+      out.close()
+    }
+    val left = new java.io.File(sub.toUri.getPath).list().toSeq
+    assert(left.filterNot(_.startsWith(".")) == Seq("1.delta"), left)
+    assert(!left.exists(_.contains(".tmp")), left)
   }
 
   test("streaming partial upsert merges strategies incrementally") {
