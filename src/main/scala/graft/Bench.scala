@@ -9,78 +9,31 @@ import org.apache.spark.sql.functions.{col, length, sum}
   * real work. One untimed warm-up query absorbs JIT/classloading so the
   * numbers reflect steady-state execution.
   *
-  * Session-lifetime hygiene (round-6 fix): orphaned checkpoint blocks are
-  * swept between queries ([[graft.operators.Checkpoints.sweep]]), and the
-  * JSON carries per-query `gc_ms` (GC time attributed to the query's timed
-  * runs) plus `storage_bytes` (block-manager memory+disk after the query),
-  * so any accumulation curve is visible from the artifact alone. A final
-  * `degradation` metric re-runs the LAST 5 suite queries isolated after a
-  * GC settle and reports suite-time / isolated-time — flat session ≈ 1.
+  * Every timed run is a [[Profiler]] scope. A gate ships the minimum of
+  * SPARK_GRAFT_BENCH_ITERS runs in `queries` and that run's
+  * [[Profiler.Record]] in `layers` (Catalyst phases, top rules, codegen,
+  * jobs/stages/tasks, task time, shuffle, spill, driver time). Its
+  * `gc_ms`, `steal_ms` and `cache` deltas cover the whole gate (setup and
+  * every run); `shuffle_bytes` is the first run's volume. The times
+  * depend on this run alone: no prior artifact is read.
+  *
+  * Session-lifetime hygiene: orphaned checkpoint blocks are swept between
+  * queries ([[graft.operators.Checkpoints.sweep]]) and `storage_bytes`
+  * records the block-manager footprint after each query, so any
+  * accumulation curve is visible from the artifact alone. A final
+  * `degradation` metric re-runs the 5 slowest suite queries isolated
+  * after a GC settle and a quiet-host wait, and reports suite-time /
+  * isolated-time — flat session ≈ 1.
   *
   * Gate queries with a build phase (`Q.setup`) are split: setup (index /
   * bucketed-table construction, saveAsTable ceremony) is timed once into
   * `setup`; the headline `queries` number times only the re-runnable
   * operator itself.
   *
-  * Outlier isolation: in-suite timings share executor/GC state, so a slow
-  * neighbor can masquerade as a regression. Any query slower than
-  * [[OutlierFactor]]× its prior-round recording (SPARK_GRAFT_BENCH_PRIOR,
-  * else the newest BENCH_r*.json in cwd) is re-benched alone after a GC
-  * settle, and BOTH numbers ship: `queries` keeps the suite time,
-  * `isolated` carries the re-run — interference and real regressions are
-  * distinguishable from the JSON alone.
-  *
-  * INLINE self-defense (round 12): the post-hoc isolation above
-  * attributes interference but the headline total still eats it, so the
-  * suite now also defends itself in place. A first timing past
-  * [[InlineRerunFactor]]× the query's prior recording triggers an
-  * immediate GC settle + checkpoint sweep and a median-of-3 re-measure
-  * whose MEDIAN becomes the suite number (a transient stall recovers;
-  * a real regression repeats and keeps its slow number); the inflated
-  * first timing ships in `inline_rerun` so nothing is hidden. An
-  * absolute outlier (> [[AbsOutlierSec]] s on a prior-sub-second query)
-  * forces the settle even when no prior-ratio fires.
-  *
-  * `cache` block: per-query graft-cache deltas (hits/misses/evictions)
-  * so a cap outgrown by a growing suite shows up in the artifact as an
-  * eviction storm, not as unexplained 10 s in-suite rebuilds.
-  *
   * SPARK_GRAFT_BENCH_REPEAT=2 runs the whole suite a second time in the
   * SAME JVM and ships `queries2`/`total2` — the flat-session proof artifact
   * (suite 2 ≈ suite 1 means no session-lifetime accumulation). */
 object Bench {
-
-  val OutlierFactor = 1.5
-
-  /** First timing past this ×prior → inline defense (warm-confirm, then
-    * settle + re-measure — see runSuite). */
-  val InlineRerunFactor = 3.0
-
-  /** Absolute mid-suite alarm: a prior-sub-second query crossing this
-    * many seconds forces a GC settle + sweep before re-measuring. */
-  val AbsOutlierSec = 5.0
-
-  /** Ratio-trigger floor (round 15): priors are min-merged across every
-    * recorded artifact, so they only ratchet DOWN round over round — and
-    * a 0.15 s prior meeting a 0.5 s first run (plain session noise at
-    * sub-second scale, measured ±50% between same-code sessions on this
-    * host) tripped the 3× trigger for nothing. Round 14's official run
-    * burned 21 inline reruns, several on sub-second firsts
-    * (q_indexed_table 0.90 s, q_agg_idset_sketch 0.78 s,
-    * q_ingest_confluent 0.44 s). A sub-second first can't meaningfully
-    * contaminate the total or the degradation gate, and the post-hoc
-    * 1.5× outlier isolation still re-times it — so the INLINE trigger
-    * ignores firsts under this line. */
-  val MinInlineSec = 1.0
-
-  /** Queries that ALWAYS re-time isolated at suite end (round 15, judge
-    * ask): the routed-json family + star-tree gates are small enough
-    * that session noise swamps them, and round 14 shipped
-    * q_filter_json_disk creep with no isolated twin to adjudicate it.
-    * Their clean twins now ship in `isolated` every round. */
-  val WatchIsolated: Set[String] = Set(
-    "q_filter_json_routed", "q_filter_json_array_routed",
-    "q_filter_json_not_routed", "q_filter_json_disk", "q_startree")
 
   /** The heavy tier re-run at FACTOR× by the scale-stress pass: every
     * query here reads only documents/embeddings (the tables
@@ -335,55 +288,14 @@ object Bench {
     "ThetaSketchAgg", "ThetaUnionAgg", "ThetaIntersectionAgg",
     "ThetaSketchEstimate", "MetricsAggregate")
 
-  /** Should a first in-suite timing trigger the inline settle +
-    * median-of-3 re-measure? Ratio trigger (3× the prior round), or the
-    * absolute alarm: a query that recorded UNDER [[AbsOutlierSec]] now
-    * crossing it by ≥1.5× its prior — which covers the 1–5 s priors the
-    * ratio clause leaves exposed (prior 2 s, first 5.5 s is only 2.75×
-    * but is absolutely alarming; the 1.5× floor keeps a 4.9 s → 5.05 s
-    * wobble from re-running a 5 s query for nothing). No prior → no
-    * trigger (nothing to compare against; the post-hoc degradation gate
-    * still covers it). */
-  private[graft] def needsInlineRerun(first: Double,
-                                      prior: Option[Double]): Boolean =
-    first >= MinInlineSec &&
-      prior.exists(p => first > p * InlineRerunFactor ||
-        (p < AbsOutlierSec && first > AbsOutlierSec && first > p * 1.5))
-
-  // ---- host-contention instrumentation (round 15) ----
-  // The bench runs in a VM guest: when the HOST is contended, the guest's
-  // vCPUs are simply not scheduled and wall-clock inflates with zero
-  // in-guest signal (storage flat at ~30 MB, total GC ~3 s/190 s in the
-  // round-14 official artifact — neither explains its 1.65 degradation).
-  // /proc/stat's steal column IS the direct signal: ticks the hypervisor
-  // ran someone else while this guest was runnable. Per-query steal time
-  // ships in the artifact so an interference band is attributable to the
-  // host from the JSON alone, and the defense paths WAIT for steal to
-  // subside before re-measuring instead of re-measuring into the band
-  // (round 14's q_json_index_lifecycle stayed at 13.5 s through a settle
-  // + 2 re-runs — the band outlived the old defense).
-
-  /** Cumulative steal ticks (USER_HZ=100 → ×10 = ms of one stolen core);
-    * 0 where /proc/stat is unreadable (non-Linux dev host). */
-  private[graft] def stealTicks(): Long = try {
-    val src = scala.io.Source.fromFile("/proc/stat")
-    try {
-      val f = src.getLines().next().trim.split("\\s+")
-      if (f.length > 8) f(8).toLong else 0L
-    } finally src.close()
-  } catch { case _: Throwable => 0L }
-
-  private[graft] def stealMsSince(t0Ticks: Long): Long =
-    math.max(stealTicks() - t0Ticks, 0L) * 10L
-
   /** Block (bounded) until host steal subsides: samples steal over
     * 300 ms windows until a window's stolen share of machine capacity
     * drops under 2%, or `maxWaitMs` elapses. Returns ms waited. Called
-    * only on the defense paths (confirmed-slow re-measures), so a quiet
-    * host pays one 300 ms sample. */
+    * before the isolated re-times, so a quiet host pays one 300 ms
+    * sample. */
   private[graft] def awaitQuietHost(cpus: Int,
                                     maxWaitMs: Long = 30000): Long = {
-    // /proc/stat steal is summed over ALL guest vCPUs, so the 2% quiet
+    // host steal is summed over ALL guest vCPUs, so the 2% quiet
     // share normalizes by the machine's core count, not the Spark
     // parallelism parameter (ADVICE r15: cpus=4 on a 32-core guest made
     // the threshold 8× too strict and burned the full wait per event)
@@ -393,44 +305,13 @@ object Bench {
     var waitedMs = 0L
     var quiet = false
     while (!quiet && waitedMs < maxWaitMs) {
-      val s0 = stealTicks()
+      val s0 = Profiler.stealTicks()
       Thread.sleep(300)
-      val stolenMs = stealMsSince(s0)
+      val stolenMs = Profiler.stealMsSince(s0)
       quiet = stolenMs < 0.02 * hostCores * 300
       waitedMs = (System.nanoTime() - t0) / 1000000
     }
     waitedMs
-  }
-
-  private[graft] def median3(a: Double, b: Double, c: Double): Double =
-    Seq(a, b, c).sorted.apply(1)
-
-  /** Queries whose suite time exceeds `factor`× their prior recording. */
-  private[graft] def outliers(cur: Map[String, Double],
-                              prior: Map[String, Double],
-                              factor: Double = OutlierFactor): Seq[String] =
-    cur.collect { case (n, v) if prior.get(n).exists(p => v > p * factor) =>
-      n }.toSeq.sorted
-
-  /** Salvage `"q_name":seconds` pairs from a prior bench JSON's `queries`
-    * block. Regex, not a JSON parser, on purpose: prior files can arrive
-    * tail-truncated or embedded as an escaped string inside a wrapper
-    * object (the driver's BENCH_r*.json does both) and the intact pairs
-    * are still useful.
-    *
-    * Scoped to the `queries` object ONLY (round 11): the old
-    * whole-document sweep also matched `gc_ms`/`storage_bytes`/
-    * `shuffle_bytes` pairs, and since later matches overwrote earlier
-    * ones, a query's "prior seconds" was silently its shuffle BYTES —
-    * inflating the baseline so far that the ≥[[OutlierFactor]]× isolated
-    * re-timer almost never fired (round 10's 26.7× q_edge_constants move
-    * shipped unattributed exactly this way). */
-  private[graft] def parsePriorQueries(json: String): Map[String, Double] = {
-    val block = "\\\\?\"queries\\\\?\"\\s*:\\s*\\{([^}]*)".r
-      .findFirstMatchIn(json).map(_.group(1)).getOrElse("")
-    "\\\\?\"(q_\\w+)\\\\?\"\\s*:\\s*([0-9]+(?:\\.[0-9]+)?(?:[eE][+-]?[0-9]+)?)".r
-      .findAllMatchIn(block)
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap
   }
 
   /** Driver-style tail extraction: the bench driver keeps only the last
@@ -444,77 +325,6 @@ object Bench {
     val tail = stdout.takeRight(budget)
     tail.linesIterator.toSeq.reverseIterator.find(_.trim.nonEmpty)
       .map(_.trim).filter(l => l.startsWith("{\"metric\"") && l.endsWith("}"))
-  }
-
-  /** Every scale factor recorded anywhere in an artifact, normalized to
-    * the numeric factor: the driver wrapper writes `"sf": 0.1`, the
-    * local artifact `"sf":"/…/sf0.1"`, and the wrapper embeds the
-    * latter escaped — all three parse. */
-  private[graft] def parsePriorSfs(json: String): Set[Double] = {
-    "\\\\?\"sf\\\\?\"\\s*:\\s*(.{0,80})".r.findAllMatchIn(json).flatMap { m =>
-      val v = m.group(1)
-      "^([0-9]+(?:\\.[0-9]+)?)".r.findFirstMatchIn(v).map(_.group(1).toDouble)
-        .orElse("sf([0-9]+(?:\\.[0-9]+)?)".r.findFirstMatchIn(v)
-          .map(_.group(1).toDouble))
-    }.toSet
-  }
-
-  private[graft] def sfOfDir(sfDir: String): Option[Double] =
-    "sf([0-9]+(?:\\.[0-9]+)?)/*$".r.findFirstMatchIn(sfDir)
-      .map(_.group(1).toDouble)
-
-  private def loadPrior(sfDir: String): Map[String, Double] = {
-    val explicit = sys.env.get("SPARK_GRAFT_BENCH_PRIOR")
-      .map(new java.io.File(_))
-    val fallback = Option(new java.io.File(".").listFiles()).toSeq.flatten
-      .filter(f => f.getName.matches("BENCH_r\\d+\\.json"))
-      .sortBy(_.getName).lastOption
-    // the official BENCH_r*.json wrapper truncates its tail (round 10's
-    // kept only ~25 pairs), which would starve the outlier re-timer; the
-    // last LOCAL artifact holds the full map, so merge it in. Where BOTH
-    // record a query, take the MINIMUM (round 12; was official-wins): a
-    // prior is the best-known achievable time for the trigger math, and
-    // an official artifact from a degraded session (round 11 shipped
-    // q_filter_json_match at 10.9 s vs 0.63 s real) would otherwise
-    // inflate the baseline so far the 3× inline trigger can't fire on
-    // the very interference it exists to catch.
-    val local = Some(new java.io.File("tools/bench_latest.json"))
-    // scale-factor gate on the min-merge: a dev run against a smaller
-    // corpus writes tiny per-query times into tools/bench_latest.json,
-    // and min-merging them into a full-scale run's prior would make
-    // nearly every query "exceed 3× prior" — re-running most of the
-    // suite. An artifact whose recorded sf disagrees with this run's is
-    // skipped; artifacts with no parseable sf are kept (old layouts).
-    val runSf = sfOfDir(sfDir)
-    def parseOf(f: Option[java.io.File], sfGate: Boolean = true)
-    : Map[String, Double] =
-      f.filter(_.isFile).fold(Map.empty[String, Double]) { f =>
-        try {
-          val json = new String(
-            java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-          val sfs = parsePriorSfs(json)
-          if (sfGate && runSf.isDefined && sfs.nonEmpty &&
-              !sfs.contains(runSf.get)) Map.empty
-          else parsePriorQueries(json)
-        } catch { case _: Throwable => Map.empty }
-      }
-    // an EXPLICIT prior is a pinned baseline — it alone governs the
-    // outlier gate, and pinning overrides the sf gate too
-    if (explicit.isDefined) parseOf(explicit, sfGate = false)
-    else {
-      val a = parseOf(local)
-      val b = parseOf(fallback)
-      (a.keySet ++ b.keySet).iterator.map { k =>
-        k -> math.min(a.getOrElse(k, Double.MaxValue),
-          b.getOrElse(k, Double.MaxValue))
-      }.toMap
-    }
-  }
-
-  private def gcMillis(): Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(b => math.max(b.getCollectionTime, 0L)).sum
   }
 
   def main(args: Array[String]): Unit = {
@@ -539,75 +349,25 @@ object Bench {
                 dir: String = sfDir): Unit =
       fn(spark, dir).write.format("noop").mode("overwrite").save()
 
-    // per-query shuffle volume: the scale signal wall-time hides at small
-    // sf (a key-width fix shows up here long before it shows up in
-    // seconds) — one listener, drained between queries
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = e.taskMetrics
-          if (m != null)
-            shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      })
-    def drainShuffleBytes(): Long = {
-      // listener bus is async: settle before reading so a query's last
-      // tasks land in its own bucket (best-effort; attribution slop of a
-      // few tasks does not change the per-query magnitude)
-      org.apache.spark.graft.ListenerBusAccess
-        .waitUntilEmpty(spark.sparkContext, 2000)
-      shuffleBytes.getAndSet(0L)
-    }
-
     // ---- interpreted-expression tripwire ([[PlanLint]]) ----
     // janino failures log `ERROR CodeGenerator`; interpreted HOFs and
     // CodegenFallback expressions are SILENT — the round-13 close
-    // shipped q_curate_badwords at 24.9 s exactly this way. A
-    // QueryExecutionListener lints EVERY action's executed plan (in-gate
-    // protocol steps included) on the bus thread — zero cost on the
-    // timed path — attributed to the gate that ran it. Classes outside
-    // the gate's whitelist ship in the artifact's `interpreted` block,
-    // print loudly, and fail the run under
+    // shipped q_curate_badwords at 24.9 s exactly this way. Every
+    // profiler scope carries the interpreted classes of the actions it
+    // ran (in-gate protocol steps included), gathered here per gate.
+    // Classes outside the gate's whitelist ship in the artifact's
+    // `interpreted` block, print loudly, and fail the run under
     // SPARK_GRAFT_BENCH_STRICT_INTERPRETED=1 (the close's setting; the
-    // driver's official run stays report-only so a new deliberate
-    // fallback can never kill the artifact).
-    val lintFound = new java.util.concurrent.ConcurrentHashMap[
-      String, java.util.Set[String]]()
-    @volatile var lintQuery: String = ""
-    // attribution handoff: the listener bus is async and the end-of-query
-    // drain caps at 2 s — a 100× query's tail events can land AFTER the
-    // cursor moved (the first 100× web run attributed q_web_pipeline's
-    // whitelisted ArrayAggregate to q_dedup_paragraphs). Settle the bus
-    // with a generous cap BEFORE every cursor move; it returns the
-    // moment the bus empties, so the cost is zero on a healthy session.
-    def lintFocus(name: String): Unit = {
-      org.apache.spark.graft.ListenerBusAccess
-        .waitUntilEmpty(spark.sparkContext, 15000)
-      lintQuery = name
+    // default stays report-only so a new deliberate fallback can never
+    // kill the artifact).
+    val prof = new Profiler(spark)
+    val lintFound = scala.collection.mutable.Map.empty[String, Set[String]]
+    def scope(name: String)(body: => Any): Profiler.Record = {
+      val r = prof.scope(name)(body)
+      if (r.interpreted.nonEmpty)
+        lintFound(name) = lintFound.getOrElse(name, Set.empty) ++ r.interpreted
+      r
     }
-    spark.listenerManager.register(
-      new org.apache.spark.sql.util.QueryExecutionListener {
-        override def onSuccess(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            durationNs: Long): Unit = {
-          val qn = lintQuery
-          if (qn.nonEmpty) {
-            val found =
-              try PlanLint.interpreted(qe.executedPlan)
-              catch { case _: Throwable => Set.empty[String] }
-            if (found.nonEmpty) {
-              val s = lintFound.computeIfAbsent(qn, _ =>
-                java.util.concurrent.ConcurrentHashMap.newKeySet[String]())
-              found.foreach(s.add)
-            }
-          }
-        }
-        override def onFailure(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            exception: Exception): Unit = ()
-      })
 
     /** Block-manager footprint (memory + disk) of persisted/checkpointed
       * RDD blocks — the session-accumulation signal. */
@@ -633,18 +393,14 @@ object Bench {
     val selected = queries.Registry.all
       .filter(q => only.forall(_.contains(q.name)))
 
-    final case class Res(name: String, sec: Double, err: Option[String],
-                         gcMs: Long, storage: Long,
-                         setupSec: Option[Double], shuffle: Long,
-                         firstSec: Double,
-                         inlineRerun: Boolean = false,
-                         cacheHits: Long = 0L, cacheMisses: Long = 0L,
-                         cacheEvicts: Long = 0L,
-                         stealMs: Long = 0L, stealWaitMs: Long = 0L)
-
-    // prior-round per-query seconds: the inline defense inside runSuite
-    // and the post-hoc outlier isolation both key off it
-    val prior = loadPrior(sfDir)
+    /** `gate` spans setup and every run; `shipped` is the run whose
+      * seconds ship, `first` the first run. */
+    final case class Res(name: String, err: Option[String], storage: Long,
+                         setupSec: Option[Double], gate: Profiler.Record,
+                         first: Profiler.Record, shipped: Profiler.Record) {
+      def sec: Double = shipped.wallMs / 1000
+      def firstSec: Double = first.wallMs / 1000
+    }
 
     def settleSession(): Unit = {
       graft.operators.Checkpoints.sweep()
@@ -654,91 +410,39 @@ object Bench {
 
     def runSuite(sel: Seq[graft.Q] = selected,
                  dir: String = sfDir,
-                 rerunBudget: Double = rerunBudgetSec,
-                 inlineDefense: Boolean = true): Seq[Res] = sel.map { q =>
-      lintFocus(q.name) // every execution until the end-of-query drain
+                 rerunBudget: Double = rerunBudgetSec): Seq[Res] = sel.map { q =>
       // a failing query must surface as an error, not masquerade as a
       // fast wall-time silently inflating the bench
       var err: Option[String] = None
-      def timedPhase(phase: () => Unit): Double = {
-        val t0 = System.nanoTime()
-        try phase() catch {
+      def guarded(phase: => Unit): Unit =
+        try phase catch {
           case e: Throwable =>
             val msg = Option(e.getMessage).getOrElse("").take(200)
             err = Some(s"${e.getClass.getSimpleName}: $msg")
         }
-        (System.nanoTime() - t0) / 1e9
+      var setupSec: Option[Double] = None
+      val runs = scala.collection.mutable.ArrayBuffer.empty[Profiler.Record]
+      def timed(): Unit = runs += scope(q.name)(guarded(runOnce(q.run, dir)))
+      val gate = scope(q.name) {
+        // build phase (catalog/index construction) timed apart from the
+        // operator so saveAsTable ceremony can't pollute the headline
+        setupSec = q.setup.map(s =>
+          scope(q.name)(guarded(s(spark, dir))).wallMs / 1000)
+        timed()
+        if (err.isEmpty && runs.head.wallMs / 1000 <= rerunBudget)
+          (2 to iters).foreach(_ => timed())
       }
-      val gc0 = gcMillis()
-      val steal0 = stealTicks()
-      val (h0, m0, e0) = graft.operators.GraftCache.statsSnapshot()
-      // build phase (catalog/index construction) timed apart from the
-      // operator so saveAsTable ceremony can't pollute the headline
-      val setupSec = q.setup.map(s => timedPhase(() => s(spark, dir)))
-      drainShuffleBytes() // setup's shuffles are its own story
-      def timed(): Double = timedPhase(() => runOnce(q.run, dir))
-      val first = timed()
-      val firstShuffle = drainShuffleBytes() // ONE run's volume, not iters'
-      // INLINE defense (restructured round 15): a degraded session mustn't
-      // ship an inflated headline — but round 14's official run recorded
-      // 21 inline events, most of them NOT session degradation: queries
-      // whose first run builds a cached derived table read first ≈
-      // build+query against a warm min-merged prior and trip the 3×
-      // trigger structurally, every round. So an alarming first is now
-      // WARM-CONFIRMED by the immediate second run (which the untriggered
-      // path runs anyway): if the second run is quiet, the result is the
-      // plain min-of-2 — identical to the untriggered path, no event. Only
-      // a second run that is ALSO alarming escalates: settle (sweep + GC),
-      // WAIT for host steal to subside (round 14's q_json_index_lifecycle
-      // band outlived a settle + 2 immediate re-runs — re-measuring INTO
-      // the band is useless), then median-of-3 over (second, t3, t4). A
-      // true regression repeats its slow time and the median keeps it.
-      val trip1 = inlineDefense && err.isEmpty &&
-        needsInlineRerun(first, prior.get(q.name))
-      // the settle's own System.gc() is defense overhead, not query GC —
-      // subtract its window so gc_ms keeps attributing the QUERY's
-      // collector pressure (the diagnostic the block exists for)
-      var settleGcMs = 0L
-      var stealWaitMs = 0L
-      var confirmed = false
-      val sec =
-        if (trip1) {
-          val second = timed()
-          if (err.isDefined || !needsInlineRerun(second, prior.get(q.name)))
-            math.min(first, second) // cold build / transient — not an event
-          else {
-            confirmed = true
-            val gcPreSettle = gcMillis()
-            settleSession()
-            stealWaitMs = awaitQuietHost(cpus)
-            settleGcMs = gcMillis() - gcPreSettle
-            val t3 = timed()
-            val t4 = timed()
-            drainShuffleBytes()
-            median3(second, t3, t4)
-          }
-        } else {
-          val rest = if (err.isEmpty && first <= rerunBudget)
-            (2 to iters).map(_ => timed()) else Nil
-          (first +: rest).min
-        }
-      val gcMs = gcMillis() - gc0 - settleGcMs
-      val stealMs = stealMsSince(steal0)
-      val (h1, m1, e1) = graft.operators.GraftCache.statsSnapshot()
       // reclaim orphaned checkpoint blocks BETWEEN queries (never mid-
       // query): a long suite must not accumulate block-manager state
       graft.operators.Checkpoints.sweep()
-      drainShuffleBytes()
-      val r = Res(q.name, sec, err, gcMs, storageBytes(),
-        setupSec, firstShuffle, first, confirmed,
-        h1 - h0, m1 - m0, e1 - e0, stealMs, stealWaitMs)
+      val r = Res(q.name, err, storageBytes(), setupSec, gate, runs.head,
+        runs.minBy(_.wallMs))
       // per-query progress on stderr (stdout carries only the JSON line):
       // a wedged suite is attributable to a query from the log alone
       System.err.println(
-        f"[bench] ${q.name}%-28s ${r.sec}%8.3fs first=$first%.3fs" +
+        f"[bench] ${q.name}%-28s ${r.sec}%8.3fs first=${r.firstSec}%.3fs" +
           setupSec.fold("")(s => f" setup=$s%.3fs") +
-          (if (confirmed) " inline-rerun" else "") +
-          (if (stealMs > 500) s" steal=${stealMs}ms" else "") +
+          (if (gate.stealMs > 500) s" steal=${gate.stealMs}ms" else "") +
           err.fold("")(e => s" ERROR $e"))
       r
     }
@@ -748,10 +452,15 @@ object Bench {
     // ---- streaming micro-batch pass: the dedup sinks driven as a real
     // micro-batch stream (MemoryStream → foreachBatch protocol), so the
     // streaming path has a recorded time series like every batch
-    // operator. Per-batch wall times ship in the artifact's `stream`
-    // block; totals join the queries map as q_stream_* entries.
-    final case class StreamRes(name: String, totalSec: Double,
-                               batchMs: Seq[Long], survivors: Long)
+    // operator. Per-batch wall times and job counts ship in the
+    // artifact's `stream` block; totals join the queries map as
+    // q_stream_* entries.
+    final case class StreamRes(name: String, total: Profiler.Record,
+                               batches: Seq[Profiler.Record],
+                               survivors: Long) {
+      def totalSec: Double = total.wallMs / 1000
+      def batchMs: Seq[Long] = batches.map(_.wallMs.toLong)
+    }
     // SPARK_GRAFT_BENCH_STREAM=0 skips the pass — for quick subset A/Bs
     // only (full/official runs keep the default ON). A skipped pass writes
     // `"stream_skipped":true` into the artifact; a failed one writes no
@@ -776,23 +485,24 @@ object Bench {
                  org.apache.spark.sql.streaming.DataStreamWriter[
                    org.apache.spark.sql.Row]): StreamRes = {
         val mem = MemoryStream[(Long, String)]
-        lintFocus(name)
         val df = mem.toDF().toDF("doc_id", "text")
         var survivors = 0L
-        val times = scala.collection.mutable.ArrayBuffer.empty[Long]
-        val t0 = System.nanoTime()
-        val q = mk(df, out => survivors += out.count()).start()
-        chunks.foreach { c =>
-          val b0 = System.nanoTime()
-          mem.addData(c.toSeq: _*)
-          q.processAllAvailable()
-          times += (System.nanoTime() - b0) / 1000000
+        val batches = scala.collection.mutable.ArrayBuffer
+          .empty[Profiler.Record]
+        val total = scope(name) {
+          val q = mk(df, out => survivors += out.count()).start()
+          try chunks.foreach { c =>
+            batches += scope(name) {
+              mem.addData(c.toSeq: _*)
+              q.processAllAvailable()
+            }
+          } finally q.stop()
         }
-        q.stop()
-        val r = StreamRes(name, (System.nanoTime() - t0) / 1e9,
-          times.toSeq, survivors)
+        val r = StreamRes(name, total, batches.toSeq, survivors)
         System.err.println(f"[bench] ${r.name}%-28s ${r.totalSec}%8.3fs " +
-          s"batches_ms=${r.batchMs.mkString(",")} survivors=$survivors")
+          s"batches_ms=${r.batchMs.mkString(",")} " +
+          s"batches_jobs=${batches.map(_.jobs).mkString(",")} " +
+          s"survivors=$survivors")
         r
       }
       val bloom = drive("q_stream_bloom_dedup")((df, h) =>
@@ -826,64 +536,37 @@ object Bench {
       Seq.empty
     }
 
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    def jmap[T](kvs: Seq[(String, T)]): String =
-      kvs.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
+    val ok = results.filter(_.err.isEmpty)
 
-    val ok0 = results.filter(_.err.isEmpty)
-
-    // re-bench suite outliers alone (post-GC) so interference can't
-    // masquerade as regression; both numbers ship
+    // degradation gate: the 5 SLOWEST suite queries re-run isolated (after
+    // a GC settle and a quiet-host wait) — a flat session scores ≈1; round
+    // 6's degraded session would have scored 20–300 here (q_pdb_* at 102s
+    // in-suite vs 0.4s isolated). Slowest, not last (round 11): the last-5
+    // window happened to land on sub-second q_pdb_* entries whose isolated
+    // noise floor dominated the quotient; the slowest queries carry
+    // enough signal that the ratio is stable. Both numbers ship; the
+    // isolated re-time never replaces the suite number.
     def isolatedRun(name: String): Option[(String, Double)] =
       selected.find(_.name == name).map { q =>
-        lintFocus(q.name)
-        System.gc()
-        Thread.sleep(200)
+        settleSession()
         // an isolated re-time measured INSIDE a host-steal band would
         // "confirm" the interference it exists to refute — wait it out
         awaitQuietHost(cpus, 15000)
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          runOnce(q.run)
-          (System.nanoTime() - t0) / 1e9
-        }
+        def once(): Double = scope(q.name)(runOnce(q.run)).wallMs / 1000
         val v = math.min(once(), once())
         graft.operators.Checkpoints.sweep()
         name -> v
       }
-    val flagged = outliers(ok0.map(r => r.name -> r.sec).toMap, prior)
-    // the degradation gate's 5 slowest join the isolated set too: their
-    // re-times previously fed ONLY the aggregate ratio, so an interfered
-    // official headline (round 13 shipped q_json_index_lifecycle at
-    // 11.4 s where its own isolated re-time read ~3 s) had no published
-    // per-query twin and no substitution. Now every deg5 query ships in
-    // `isolated` and the same below-half rule applies; `degradation`
-    // itself stays computed on the PRE-substitution suite numbers.
-    val deg5 = ok0.sortBy(-_.sec).take(5)
-    val isolated =
-      (flagged ++ deg5.map(_.name) ++
-        WatchIsolated.toSeq.sorted.filter(n => ok0.exists(_.name == n)))
-        .distinct.flatMap(isolatedRun)
-    // Substitution rule (round 13): the inline defense ships the median
-    // of a settle + re-measure, but a SUSTAINED pressure band keeps that
-    // median inflated (round 12 shipped q_join_bucketed at 1.37 s while
-    // its own isolated block read 0.46 s — 2.97×, one noise-notch under
-    // the 3× outlier gate). When the post-hoc isolated re-time lands
-    // below HALF the shipped suite number, the suite number was the
-    // band, not the query: the isolated time becomes the headline and
-    // the displaced band ships attributed in `inline_rerun`.
-    val isoMap = isolated.toMap
-    val ok = ok0.map { r =>
-      isoMap.get(r.name).filter(_ < r.sec * 0.5).fold(r)(v =>
-        r.copy(sec = v, firstSec = r.sec, inlineRerun = true))
-    }
-    val qs = jmap(ok.map(r => r.name -> r.sec) ++
+    val deg5 = ok.sortBy(-_.sec).take(5)
+    val isolated = deg5.flatMap(r => isolatedRun(r.name))
+    val degradation =
+      if (isolated.isEmpty) 1.0
+      else deg5.map(_.sec).sum / math.max(isolated.map(_._2).sum, 1e-9)
+
+    val qs = Json.obj(ok.map(r => r.name -> r.sec) ++
       streamResults.map(r => r.name -> r.totalSec))
+    val layersJson = s""","layers":${Json.obj(ok.map(r => r.name ->
+      r.shipped.json) ++ streamResults.map(r => r.name -> r.total.json))}"""
     // flat_ratio = last batch / batch 2 (batch 1 pays first-run warmup):
     // ≈1 means per-batch cost independent of accumulated index size; the
     // round-10 near-dup sink read 5.5 here (O(index) probe re-read).
@@ -892,98 +575,62 @@ object Bench {
       else math.round(ms.last.toDouble / math.max(ms(1), 1) * 100) / 100.0
     val skippedJson = if (streamSkipped) ""","stream_skipped":true""" else ""
     val streamJson = if (streamResults.isEmpty) skippedJson else
-      s""","stream":${jmap(streamResults.map(r => r.name ->
-        (s"""{"total_sec":${r.totalSec},"batches_ms":${r.batchMs
-          .mkString("[", ",", "]")},"survivors":${r.survivors
-          },"flat_ratio":${flatRatio(r.batchMs)}}""")))}"""
+      s""","stream":${Json.obj(streamResults.map(r => r.name -> Json.obj(Seq(
+        "total_sec" -> r.totalSec,
+        "batches_ms" -> Json.arr(r.batchMs),
+        "batches_jobs" -> Json.arr(r.batches.map(_.jobs)),
+        "survivors" -> r.survivors,
+        "flat_ratio" -> flatRatio(r.batchMs)))))}"""
     val errs = results.collect { case r if r.err.isDefined =>
-      r.name -> jstr(r.err.get) }
-    val errJson = if (errs.isEmpty) "" else s""","errors":${jmap(errs)}"""
+      r.name -> Json.str(r.err.get) }
+    val errJson = if (errs.isEmpty) "" else s""","errors":${Json.obj(errs)}"""
     val total = ok.map(_.sec).sum
     val setupJson = {
       val s = results.collect { case r if r.setupSec.isDefined =>
         r.name -> r.setupSec.get }
-      if (s.isEmpty) "" else s""","setup":${jmap(s)}"""
+      if (s.isEmpty) "" else s""","setup":${Json.obj(s)}"""
     }
-    val gcJson = s""","gc_ms":${jmap(results.map(r => r.name -> r.gcMs))}"""
+    val gcJson =
+      s""","gc_ms":${Json.obj(results.map(r => r.name -> r.gate.gcMs))}"""
     val stJson =
-      s""","storage_bytes":${jmap(results.map(r => r.name -> r.storage))}"""
+      s""","storage_bytes":${Json.obj(results.map(r => r.name -> r.storage))}"""
     // cross-gate block-manager high-water (round 15, judge ask): the
     // one-number accumulation verdict — round 14's official artifact
     // peaked at 34 MB, i.e. the per-gate teardown already bounds it
     val storageHighWater =
       if (results.isEmpty) 0L else results.map(_.storage).max
     val highJson = s""","storage_high_water_bytes":$storageHighWater"""
-    // host-steal attribution: per-query stolen-core ms + the subside
-    // waits the defense paths paid; a degraded official run is now
+    // host-steal attribution: per-query stolen-core ms; a degraded run is
     // attributable to the hypervisor from the JSON alone
-    val stealTotalMs = results.map(_.stealMs).sum
+    val stealTotalMs = results.map(_.gate.stealMs).sum
     val stealJson =
-      s""","steal_ms":${jmap(results.map(r => r.name -> r.stealMs))}""" +
-        s""","steal_total_ms":$stealTotalMs""" + {
-        val w = results.collect { case r if r.stealWaitMs > 0 =>
-          r.name -> r.stealWaitMs }
-        if (w.isEmpty) "" else s""","steal_wait_ms":${jmap(w)}"""
-      }
-    val shJson =
-      s""","shuffle_bytes":${jmap(results.map(r => r.name -> r.shuffle))}"""
-    // inflated first timings the inline defense replaced (median shipped
-    // in `queries`) plus suite bands the isolated substitution displaced
-    // — the interference is attributed, never hidden
-    val inlineJson = {
-      val ir = ok.collect { case r if r.inlineRerun =>
-        r.name -> r.firstSec }
-      if (ir.isEmpty) "" else s""","inline_rerun":${jmap(ir)}"""
-    }
+      s""","steal_ms":${Json.obj(results.map(r => r.name -> r.gate.stealMs))}""" +
+        s""","steal_total_ms":$stealTotalMs"""
+    val shJson = s""","shuffle_bytes":${Json.obj(results.map(r =>
+      r.name -> r.first.shuffleWriteBytes))}"""
     // per-query graft-cache activity; only rows with activity ship (most
     // queries touch no cached derived table)
     val cacheJson = {
-      val c = results.collect {
-        case r if r.cacheHits + r.cacheMisses + r.cacheEvicts > 0 =>
-          r.name -> (s"""{"hits":${r.cacheHits},"misses":${r.cacheMisses}""" +
-            s""","evictions":${r.cacheEvicts}}""")
+      val c = results.map(r => r.name -> r.gate).collect {
+        case (n, g) if g.cacheHits + g.cacheMisses + g.cacheEvictions > 0 =>
+          n -> Json.obj(Seq("hits" -> g.cacheHits, "misses" -> g.cacheMisses,
+            "evictions" -> g.cacheEvictions))
       }
-      if (c.isEmpty) "" else s""","cache":${jmap(c)}"""
+      if (c.isEmpty) "" else s""","cache":${Json.obj(c)}"""
     }
 
     val isoJson = if (isolated.isEmpty) ""
-      else s""","isolated":${jmap(isolated)}"""
-
-    // degradation gate: the 5 SLOWEST suite queries re-run isolated — a
-    // flat session scores ≈1; round 6's degraded session would have
-    // scored 20–300 here (q_pdb_* at 102s in-suite vs 0.4s isolated).
-    // Slowest, not last (round 11): the last-5 window happened to land on
-    // sub-second q_pdb_* entries whose isolated noise floor dominated the
-    // quotient (the double-suite read 2.05 from denominator jitter alone);
-    // the slowest queries carry enough signal that the ratio is stable.
-    // Computed over the PRE-substitution numbers (ok0): the substitution
-    // heals the headline but must not mask the session-health signal.
-    // deg5 computed above (pre-substitution) so its isolated re-times
-    // ship in `isolated` and feed the below-half substitution; here only
-    // the aggregate session-health ratio is derived from them
-    val degradation = {
-      val deg5Iso = deg5.flatMap(r => isoMap.get(r.name))
-      if (deg5Iso.isEmpty) 1.0
-      else {
-        val suiteT = deg5.map(_.sec).sum
-        val isoT = math.max(deg5Iso.sum, 1e-9)
-        suiteT / isoT
-      }
-    }
+      else s""","isolated":${Json.obj(isolated)}"""
     val degJson = s""","degradation":$degradation"""
 
-    // optional same-JVM second full suite — the flat-session proof.
-    // Inline defense OFF: queries2 exists to SHOW session-lifetime
-    // degradation; healing a degraded second pass in place (and not
-    // reporting it — inline_rerun only covers suite 1) would ship a
-    // masked "flat" total2 that contradicts the artifact's purpose.
+    // optional same-JVM second full suite — the flat-session proof
     val repeat = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEAT", "1").toInt
     var total2Sum: Double = 0.0
     val repeatJson = if (repeat < 2) "" else {
-      val again = runSuite(inlineDefense = false)
+      val again = runSuite()
       val ok2 = again.filter(_.err.isEmpty)
       total2Sum = ok2.map(_.sec).sum
-      s""","queries2":${jmap(ok2.map(r => r.name -> r.sec))}""" +
+      s""","queries2":${Json.obj(ok2.map(r => r.name -> r.sec))}""" +
         s""","total2":$total2Sum"""
     }
 
@@ -1005,7 +652,7 @@ object Bench {
       if (scaleSel.isEmpty) "" else {
         val scaleDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR",
           s"target/graft_scale_${scaleFactor}x")
-        lintFocus("") // corpus expansion is harness work, not a gate's
+        // corpus expansion runs in no scope: harness work, not a gate's
         val prepSec =
           graft.sources.ScaleCorpus.materialize(spark, sfDir, scaleDir,
             scaleFactor)
@@ -1031,12 +678,7 @@ object Bench {
         // divided by warm 1× minima). Cold times ship separately as
         // `cold`/`cold_ratio` — build-path scaling is a real signal, it
         // just must be compared cold-to-cold.
-        // inlineDefense off: prior-round seconds are BASE-corpus numbers,
-        // so at 10× nearly every first run would trip the 3× trigger and
-        // the median-of-3 would bias scale minima upward vs the base
-        // suite's min-of-2 — the ratio must compare like with like
-        val scaled = runSuite(scaleSel, scaleDir, rerunBudget = 1e9,
-          inlineDefense = false)
+        val scaled = runSuite(scaleSel, scaleDir, rerunBudget = 1e9)
         // The replica expansion prefixes every token with "r{N}_", so the
         // "10×" corpus carries ~15× the text BYTES of the base (measured
         // 14.92× at sf0.1). Text-bearing queries are linear in bytes, not
@@ -1054,7 +696,7 @@ object Bench {
         } catch { case _: Exception => scaleFactor.toDouble }
         val okS = scaled.filter(_.err.isEmpty)
         val baseTimes = ok.map(r => r.name -> r.sec).toMap
-        val baseFirst = ok0.map(r => r.name -> r.firstSec).toMap
+        val baseFirst = ok.map(r => r.name -> r.firstSec).toMap
         val warmSec = okS.map(r => r.name -> r.sec).toMap
         val coldSec = okS.map(r => r.name -> r.firstSec).toMap
         def mkRatios(cur: Map[String, Double],
@@ -1064,12 +706,9 @@ object Bench {
               (if (b > 0) c / b else Double.PositiveInfinity))
             case _ => None
           })
-        // scale-pass defense (round 13): the inline defense deliberately
-        // opts out above (prior seconds are base-corpus numbers), which
-        // left this pass the one unprotected stretch of the session —
-        // round 12's official artifact flagged warm ratios of 27× that
-        // the same-code close run read clean, mixing interference with
-        // physics inseparably. So before any ratio flags: every query
+        // scale-pass defense (round 13): round 12's official artifact
+        // flagged warm ratios of 27× that the same-code close run read
+        // clean, mixing interference with physics inseparably. So before any ratio flags: every query
         // whose warm or cold ratio would cross the flag line — plus the
         // worst-warm queries regardless, so every reported worst entry
         // carries an isolated confirmation — re-times ISOLATED after a
@@ -1087,20 +726,15 @@ object Bench {
           .sortBy(-_._2).take(3).map(_._1)
         def isoScale(name: String, cold: Boolean): Option[(String, Double)] =
           scaleSel.find(_.name == name).map { q =>
-            lintFocus(q.name) // else this re-run's expressions would
-            // attribute to whatever query finished the scale suite
             if (cold) {
               graft.operators.GraftCache.clearAll()
               // suite cold timings run AFTER the untimed setup phase;
               // replay it so the isolated cold measures the same thing
-              q.setup.foreach(s => s(spark, scaleDir))
+              q.setup.foreach(s => scope(q.name)(s(spark, scaleDir)))
             }
             settleSession()
-            def once(): Double = {
-              val t0 = System.nanoTime()
-              runOnce(q.run, scaleDir)
-              (System.nanoTime() - t0) / 1e9
-            }
+            def once(): Double =
+              scope(q.name)(runOnce(q.run, scaleDir)).wallMs / 1000
             val v = if (cold) once() else math.min(once(), once())
             graft.operators.Checkpoints.sweep()
             name -> v
@@ -1123,7 +757,7 @@ object Bench {
         val superLinearCold = coldRatios.collect {
           case (n, x) if x > flagLine => n }.sorted
         val errsS = scaled.collect { case r if r.err.isDefined =>
-          r.name -> jstr(r.err.get) }
+          r.name -> Json.str(r.err.get) }
         def r2(x: Double): Double = math.round(x * 100) / 100.0
         val worst = ratios.sortBy(-_._2).take(3)
           .map { case (n, x) => n -> r2(x) }
@@ -1137,48 +771,43 @@ object Bench {
         val isoWarmMap = isoAll.toMap
         val worstIso = worst.flatMap { case (n, _) =>
           isoWarmMap.get(n).map(n -> r2(_)) }
+        val superJson =
+          s""","super_linear":${Json.arr(superLinear.map(Json.str))}""" +
+            s""","super_linear_cold":${Json.arr(superLinearCold.map(Json.str))}"""
         scaleSummary =
-          s""","scale":{"factor":$scaleFactor""" +
-            s""","super_linear":${superLinear.map(jstr)
-              .mkString("[", ",", "]")}""" +
-            s""","super_linear_cold":${superLinearCold.map(jstr)
-              .mkString("[", ",", "]")}""" +
-            s""","worst_warm_ratio":${jmap(worst)}""" +
-            s""","worst_isolated_sec":${jmap(worstIso)}}"""
+          s""","scale":{"factor":$scaleFactor$superJson""" +
+            s""","worst_warm_ratio":${Json.obj(worst)}""" +
+            s""","worst_isolated_sec":${Json.obj(worstIso)}}"""
         s""","scale":{"factor":$scaleFactor,"bytes_factor":$bytesFactor""" +
           s""","prep_sec":$prepSec""" +
-          s""","queries":${jmap(okS.map(r =>
+          s""","queries":${Json.obj(okS.map(r =>
             r.name -> healedWarm(r.name)))}""" +
-          s""","cold":${jmap(okS.map(r => r.name -> healedCold(r.name)))}""" +
-          s""","isolated":${jmap(isoAll)}""" +
+          s""","cold":${Json.obj(okS.map(r => r.name -> healedCold(r.name)))}""" +
+          s""","isolated":${Json.obj(isoAll)}""" +
           (if (isoCold.isEmpty) ""
-           else s""","isolated_cold":${jmap(isoCold)}""") +
+           else s""","isolated_cold":${Json.obj(isoCold)}""") +
           (if (retimedWarm.isEmpty) ""
-           else s""","retimed":${jmap(retimedWarm)}""") +
+           else s""","retimed":${Json.obj(retimedWarm)}""") +
           (if (retimedCold.isEmpty) ""
-           else s""","retimed_cold":${jmap(retimedCold)}""") +
-          s""","gc_ms":${jmap(okS.map(r => r.name -> r.gcMs))}""" +
-          s""","shuffle_bytes":${jmap(okS.map(r => r.name -> r.shuffle))}""" +
-          s""","ratio":${jmap(ratios.map { case (n, x) => n -> r2(x) })}""" +
-          s""","cold_ratio":${jmap(coldRatios.map { case (n, x) =>
+           else s""","retimed_cold":${Json.obj(retimedCold)}""") +
+          s""","gc_ms":${Json.obj(okS.map(r => r.name -> r.gate.gcMs))}""" +
+          s""","shuffle_bytes":${Json.obj(okS.map(r =>
+            r.name -> r.first.shuffleWriteBytes))}""" +
+          s""","ratio":${Json.obj(ratios.map { case (n, x) => n -> r2(x) })}""" +
+          s""","cold_ratio":${Json.obj(coldRatios.map { case (n, x) =>
             n -> r2(x) })}""" +
-          (if (errsS.isEmpty) "" else s""","errors":${jmap(errsS)}""") +
-          s""","super_linear":${superLinear.map(jstr).mkString("[", ",", "]")}""" +
-          s""","super_linear_cold":${superLinearCold.map(jstr)
-            .mkString("[", ",", "]")}}"""
+          (if (errsS.isEmpty) "" else s""","errors":${Json.obj(errsS)}""") +
+          superJson + "}"
       }
     }
 
     // ---- interpreted-expression verdict ([[PlanLint]] tripwire) ----
-    lintFocus("")
-    val lintViolations = {
-      import scala.jdk.CollectionConverters._
-      lintFound.asScala.toSeq.sortBy(_._1).flatMap { case (q, cls) =>
+    val lintViolations =
+      lintFound.toSeq.sortBy(_._1).flatMap { case (q, cls) =>
         val allowed = InterpretedWhitelist.getOrElse(q, Set.empty)
-        val bad = cls.asScala.toSet -- allowed -- InterpretedGlobal
+        val bad = cls -- allowed -- InterpretedGlobal
         if (bad.isEmpty) None else Some(q -> bad.toSeq.sorted)
       }
-    }
     lintViolations.foreach { case (q, cls) =>
       System.err.println(s"[bench] INTERPRETED $q: ${cls.mkString(", ")}" +
         " — codegen silently fell back in a hot plan; fix the" +
@@ -1187,13 +816,15 @@ object Bench {
     }
     val interpJson =
       if (lintViolations.isEmpty) ""
-      else s""","interpreted":${jmap(lintViolations.map { case (q, cls) =>
-        q -> cls.map(jstr).mkString("[", ",", "]") })}"""
+      else s""","interpreted":${Json.obj(lintViolations.map { case (q, cls) =>
+        q -> Json.arr(cls.map(Json.str)) })}"""
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs$errJson$setupJson$isoJson$degJson$gcJson$stJson$highJson$stealJson$shJson$inlineJson$cacheJson$repeatJson$streamJson$interpJson$scaleJson,"sf":"$sfDir"}"""
-    // The FULL artifact lands on disk; SPARK_GRAFT_BENCH_OUT overrides.
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs$errJson$setupJson$isoJson$degJson$gcJson$stJson$highJson$stealJson$shJson$cacheJson$layersJson$repeatJson$streamJson$interpJson$scaleJson,"sf":"$sfDir"}"""
+    // The FULL artifact lands on disk (under the git-ignored target/ by
+    // default, so a dev run leaves the tree clean); SPARK_GRAFT_BENCH_OUT
+    // overrides.
     val outPath = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "tools/bench_latest.json"))
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench_latest.json"))
     try {
       Option(outPath.getParent).foreach(java.nio.file.Files.createDirectories(_))
       java.nio.file.Files.write(outPath, json.getBytes("UTF-8"))
@@ -1230,30 +861,26 @@ object Bench {
       "q_decontaminate")
     val okTimes = ok.map(r => r.name -> r.sec).toMap
     val headJson =
-      jmap(headline.flatMap(n => okTimes.get(n).map(v => n -> r3(v))))
+      Json.obj(headline.flatMap(n => okTimes.get(n).map(v => n -> r3(v))))
     val errNames = errs.map(_._1)
     val errsCompact =
       if (errNames.isEmpty) ""
-      else s""","n_errors":${errNames.size},"error_names":${errNames.take(3)
-        .map(jstr).mkString("[", ",", "]")}"""
-    val scaleCompact = if (scaleSummary.isEmpty) "" else scaleSummary
+      else s""","n_errors":${errNames.size},"error_names":${Json.arr(
+        errNames.take(3).map(Json.str))}"""
     val tot2Compact = if (repeat < 2) "" else s""","total2":$total2Sum"""
-    val nInline = ok.count(_.inlineRerun)
-    val inlineCompact =
-      if (nInline == 0) "" else s""","n_inline_rerun":$nInline"""
     val interpCompact =
       if (lintViolations.isEmpty) ""
       else s""","n_interpreted":${lintViolations.size}"""
     def compactLine(withQueries: Boolean, withScale: Boolean): String =
       s"""{"metric":"total","value":${r3(total)},"unit":"sec"""" +
-        s""","n_queries":${ok.size}$errsCompact$inlineCompact$interpCompact""" +
+        s""","n_queries":${ok.size}$errsCompact$interpCompact""" +
         skippedJson +
         s""","degradation":${r3(degradation)}$tot2Compact""" +
         s""","steal_total_ms":$stealTotalMs""" +
         s""","storage_high_water_bytes":$storageHighWater""" +
         (if (withQueries) s""","queries":$headJson""" else "") +
-        (if (withScale) scaleCompact else "") +
-        s""","artifact":${jstr(outPath.toString)},"sf":"$sfDir"}"""
+        (if (withScale) scaleSummary else "") +
+        s""","artifact":${Json.str(outPath.toString)},"sf":"$sfDir"}"""
     // Final fallbacks are provably small valid JSON (fixed numeric
     // fields only) — never a mid-object truncation, which would
     // re-create the exact unparseable-tail failure this line prevents.

@@ -18,11 +18,12 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
   * emits a per-row call into interpreted `eval`, with an InternalRow
   * materialization per call) — which includes every
   * [[HigherOrderFunction]] (transform/filter/aggregate/zip_with …) and
-  * `from_json`/jsonpath. [[graft.Bench]] attaches this to a
-  * QueryExecutionListener so EVERY action a gate runs (including
-  * in-gate index builds and protocol steps, not just the final frame)
-  * is linted off the timed path, and fails the close on classes not in
-  * the gate's documented whitelist. */
+  * `from_json`/jsonpath. The lint rides [[graft.Profiler]]'s
+  * QueryExecutionListener: EVERY action run inside a profiler scope
+  * (including in-gate index builds and protocol steps, not just the
+  * final frame) is linted off the timed path into that scope's record,
+  * and [[graft.Bench]] fails the close on classes not in the gate's
+  * documented whitelist. */
 object PlanLint {
 
   /** Subtree components of a higher-order function — the parent HOF

@@ -2,111 +2,18 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Outlier-isolation decision logic (the bench main is exercised by the
-  * driver; the pure pieces are pinned here). */
+/** The bench main's pure pieces: host-steal helpers, the stdout tail
+  * contract and the per-gate `layers` record's key set. */
 class BenchSpec extends AnyFunSuite {
-
-  test("outliers: a slow neighbor's victim is flagged, real speed is not") {
-    // synthetic slow-neighbor round: q_a was 0.2s last round, records 0.9s
-    // in-suite (interference); q_b is genuinely steady; q_new has no prior
-    val prior = Map("q_a" -> 0.2, "q_b" -> 0.2)
-    val cur = Map("q_a" -> 0.9, "q_b" -> 0.21, "q_new" -> 5.0)
-    assert(Bench.outliers(cur, prior) == Seq("q_a"))
-    // boundary: exactly factor× is NOT an outlier (strictly greater)
-    assert(Bench.outliers(Map("q_b" -> 0.3), prior) == Seq.empty)
-    assert(Bench.outliers(Map("q_b" -> 0.301), prior) == Seq("q_b"))
-    // no prior file at all → nothing flagged, bench degrades gracefully
-    assert(Bench.outliers(cur, Map.empty) == Seq.empty)
-  }
-
-  test("parsePriorQueries: salvages intact prefix of a truncated JSON") {
-    val full =
-      """{"metric":"total","value":56.3,"unit":"sec","queries":{"q_a":0.5,"q_b":1.25e-1,"q_c":2.0},"sf":"x"}"""
-    assert(Bench.parsePriorQueries(full) ==
-      Map("q_a" -> 0.5, "q_b" -> 0.125, "q_c" -> 2.0))
-    // tail-truncated mid-entry (the r4 failure mode): prefix still parses
-    val truncated =
-      """{"metric":"total","value":56.3,"queries":{"q_a":0.5,"q_b":1.9,"q_c":2"""
-    val got = Bench.parsePriorQueries(truncated)
-    assert(got("q_a") == 0.5 && got("q_b") == 1.9)
-    assert(Bench.parsePriorQueries("not json") == Map.empty)
-    // the driver's wrapper format: the queries block escaped inside a
-    // "tail" string
-    val wrapped =
-      """{"n":4,"tail":"...\"queries\":{\"q_a\":0.5,\"q_b\":1.9,\"q_c\":2"}"""
-    val w = Bench.parsePriorQueries(wrapped)
-    assert(w("q_a") == 0.5 && w("q_b") == 1.9)
-    // pairs OUTSIDE the queries block (gc_ms, shuffle_bytes) must NOT
-    // overwrite the suite seconds — round 10's isolated re-timer missed a
-    // 26.7× move because a query's "prior" was silently its shuffle bytes
-    val blocks =
-      """{"queries":{"q_a":0.5},"gc_ms":{"q_a":2000},"shuffle_bytes":{"q_a":123456}}"""
-    assert(Bench.parsePriorQueries(blocks) == Map("q_a" -> 0.5))
-  }
-
-  test("parsePriorSfs + sfOfDir: the min-merge's scale-factor gate") {
-    // the driver wrapper records a numeric sf
-    assert(Bench.parsePriorSfs("""{"n":4, "sf": 0.1, "tail": "x"}""") ==
-      Set(0.1))
-    // the local artifact records the corpus dir path
-    assert(Bench.parsePriorSfs("""{"sf":"/root/testdata/sf0.01"}""") ==
-      Set(0.01))
-    // the wrapper embeds the local form ESCAPED; both normalize to one
-    val wrapped =
-      "{\"sf\": 0.1, \"tail\": \"...\\\"sf\\\":\\\"/root/testdata/sf0.1\\\"\"}"
-    assert(Bench.parsePriorSfs(wrapped) == Set(0.1))
-    // no sf anywhere → empty set (old layouts stay accepted by the gate)
-    assert(Bench.parsePriorSfs("""{"queries":{"q_a":0.5}}""").isEmpty)
-    // a dev artifact from a different corpus normalizes differently —
-    // the condition loadPrior uses to drop it
-    assert(Bench.parsePriorSfs("""{"sf":"/tmp/mini/sf0.001"}""") ==
-      Set(0.001))
-    assert(Bench.sfOfDir("/root/testdata/sf0.1").contains(0.1))
-    assert(Bench.sfOfDir("/root/testdata/sf0.1/").contains(0.1))
-    assert(Bench.sfOfDir("/data/corpus").isEmpty)
-  }
-
-  test("needsInlineRerun: ratio and absolute triggers; no prior is safe") {
-    // sub-second floor (round 15): min-merged priors only ratchet down,
-    // so a 0.2s prior meeting 0.61s of session noise used to trip the
-    // trigger for nothing — firsts under MinInlineSec never fire
-    assert(!Bench.needsInlineRerun(0.6, Some(0.2)))
-    assert(!Bench.needsInlineRerun(0.61, Some(0.2)))
-    assert(!Bench.needsInlineRerun(0.99, Some(0.1)))
-    // at or past the floor the ratio trigger is live again
-    assert(Bench.needsInlineRerun(1.0, Some(0.2)))
-    assert(Bench.needsInlineRerun(1.21, Some(0.4)))
-    assert(!Bench.needsInlineRerun(1.2, Some(0.4)))
-    // absolute alarm: a query that recorded UNDER 5s crossing 5s at
-    // >=1.5x its prior — the 1-5s prior band the ratio clause leaves
-    // exposed (prior 2s, first 5.5s is only 2.75x, fires absolutely)
-    assert(Bench.needsInlineRerun(5.5, Some(2.0)))
-    // a genuinely slow query (prior 4s) at 5.1s is neither 3x nor
-    // 1.5x past the alarm line: no trigger
-    assert(!Bench.needsInlineRerun(5.1, Some(4.0)))
-    // a 4.9s query wobbling to 5.05s does not re-run (1.5x floor)
-    assert(!Bench.needsInlineRerun(5.05, Some(4.9)))
-    // a query already slower than the alarm line is ratio-only
-    assert(!Bench.needsInlineRerun(8.0, Some(6.0)))
-    // no prior round -> never triggers (degradation gate still covers it)
-    assert(!Bench.needsInlineRerun(100.0, None))
-  }
-
-  test("median3: transient stall recovers, true regression persists") {
-    // interference: 10.9s first, 0.6s after the settle -> median ships 0.6
-    assert(Bench.median3(10.9, 0.6, 0.63) == 0.63)
-    // real regression: slow time repeats -> median keeps it
-    assert(Bench.median3(3.1, 3.0, 2.9) == 3.0)
-  }
 
   test("host-steal instrumentation: monotone ticks, bounded quiet wait") {
     // /proc/stat steal is cumulative — two reads never go backwards
     // (0 on hosts without the column, which stealMsSince clamps)
-    val a = Bench.stealTicks()
-    val b = Bench.stealTicks()
+    val a = Profiler.stealTicks()
+    val b = Profiler.stealTicks()
     assert(b >= a)
-    assert(Bench.stealMsSince(a) >= 0)
-    assert(Bench.stealMsSince(Long.MaxValue) == 0) // clamped, never negative
+    assert(Profiler.stealMsSince(a) >= 0)
+    assert(Profiler.stealMsSince(Long.MaxValue) == 0) // clamped, never negative
     // a quiet host exits after ~one 300ms sample; the budget bounds a
     // noisy one — either way the wait never exceeds maxWaitMs by much
     val waited = Bench.awaitQuietHost(cpus = 32, maxWaitMs = 1200)
@@ -132,5 +39,24 @@ class BenchSpec extends AnyFunSuite {
     // the bench's progressive fallback keeps the real line under budget
     val huge = json.replace("\"sf\":\"x\"", "\"pad\":\"" + "y" * 3000 + "\"")
     assert(Bench.driverTailExtract(huge + "\n").isEmpty)
+  }
+
+  test("layers: every quantity BENCHMARK.json names carries that name") {
+    import scala.jdk.CollectionConverters._
+    val perLayer = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File("BENCHMARK.json")).get("per_layer")
+      .elements().asScala.map(_.get("name").asText()).toSet
+    val keys = Profiler.Record("q_x", 0.0).layers.map(_._1)
+    assert(keys.distinct == keys)
+    // quantities BENCHMARK.json has no name for (steal in ms, not %)
+    assert(keys.filterNot(perLayer).toSet ==
+      Set("wall_ms", "rules.top", "host.steal_ms", "interpreted"))
+    assert(keys.filter(perLayer).toSet == Set(
+      "sql.parse_analyze_ms", "rules.optimize_ms", "plan.physical_ms",
+      "codegen.compiles", "codegen.compile_ms", "exec.driver_ms",
+      "exec.jobs", "exec.stages", "exec.tasks", "exec.task_run_ms",
+      "exec.task_cpu_ms", "exec.task_gc_ms", "exec.shuffle_write_bytes",
+      "exec.spill_bytes", "cache.hits", "cache.misses", "cache.evictions",
+      "host.gc_ms"))
   }
 }
